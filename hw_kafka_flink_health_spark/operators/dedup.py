@@ -15,29 +15,30 @@ Scale design notes:
   — the sub-quadratic path for 100 TB corpora.
 * SimHash: per-token xxhash64 (JVM-side), per-bit sign sums, recombined to a
   63-bit fingerprint (bit 63 is skipped so the result stays a positive
-  signed long). Near-dup candidates are grouped by fingerprint band.
+  signed long).
 """
 
 from __future__ import annotations
 
-import threading
 from functools import reduce
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-# Session-scoped keyed cache for the near-dup PAIRS table and its
-# connected-components cluster map — the same pattern (and the same
-# staleness argument) as the shared graph edge cache in queries/graph.py:
-# five registered queries build the identical jaccard-pairs pipeline
-# (dedup_ngram_jaccard, dedup_clusters, dedup_cluster_report,
-# mlprep_dedup_aware_split, graph_triangle_neardup), and three of them
-# then run the identical label-propagation fixpoint on it. The key pins
-# the session object AND the exact parquet file list (part names are
-# unique per write, so a changed input can never be served stale) plus
-# every parameter that shapes the result. In-memory only, per process:
-# every bench/oracle run still computes the table from the parquet
-# inputs — the cache only stops the SAME session recomputing the same
+from hw_kafka_flink_health_spark.session import input_signature, session_cached
+
+# The near-dup PAIRS table and its connected-components cluster map live
+# in the session cache (`session_cached`): five registered queries build
+# the identical jaccard-pairs pipeline (dedup_ngram_jaccard,
+# dedup_clusters, dedup_cluster_report, mlprep_dedup_aware_split,
+# graph_triangle_neardup), and three of them then run the identical
+# label-propagation fixpoint on it. The pairs key pins the exact parquet
+# file list with per-file size+mtime and the input frame's plan
+# (semanticHash, confirmed by sameSemantics on a hit), plus every
+# parameter that shapes the result, so a changed, filtered or
+# re-projected input is never served another frame's pairs. Every
+# bench/oracle run still computes the table from the parquet inputs —
+# the cache only stops the SAME session recomputing the same
 # intermediate five times. Non-file-backed inputs (test/fuzz frames from
 # createDataFrame) have no inputFiles and skip caching entirely.
 #
@@ -48,50 +49,15 @@ from pyspark.sql import functions as F
 # would make every later cache hit fail on missing blocks rather than
 # recompute — port the cache to reliable checkpoint() (or catch the
 # block-fetch failure and invalidate) before running it off local mode.
-_PAIRS_CACHE: dict = {}
-_PAIRS_CACHE_CAP = 4
-_CC_CACHE: list = []  # [(pairs_df, src, dst, max_iter, labels_df)]
-_CC_CACHE_CAP = 2
-_DEDUP_CACHE_LOCK = threading.Lock()
+_PAIRS_CAP = 4
+_CC_CAP = 2
 
 
-def _pairs_cache_key(df: DataFrame, *params) -> tuple | None:
-    """Cache key = (session, exact file list, per-file size+mtime,
-    CANONICALIZED analyzed plan, params). The canonical plan string
-    (exprIds normalized — identical builds compare equal, review r12)
-    pins every transformation between the scan and the operator, so a
-    filtered or re-projected frame over the same files can never be
-    served another frame's pairs; the size+mtime signature (ADVICE r12)
-    invalidates on an in-session overwrite of a fixed-name input file.
-    The plan is rendered with maxToStringFields raised (ADVICE r12: the
-    default render truncates wide expression lists at 25 fields, so two
-    different wide plans could in principle collide). Non-file-backed
-    frames (createDataFrame fixtures) skip caching: a LocalRelation's
-    canonical form does not pin its rows."""
-    from hw_kafka_flink_health_spark.sources.files import file_stats_signature
-
-    try:
-        files = tuple(sorted(df.inputFiles()))
-        if not files:
-            return None
-        stats = file_stats_signature(files)
-        spark = df.sparkSession
-        conf_key = "spark.sql.debug.maxToStringFields"
-        try:
-            old = spark.conf.get(conf_key)
-        except Exception:  # unset → provider raises in some versions
-            old = None
-        spark.conf.set(conf_key, "2147483647")
-        try:
-            plan = df._jdf.queryExecution().analyzed().canonicalized().toString()
-        finally:
-            if old is None:
-                spark.conf.unset(conf_key)
-            else:
-                spark.conf.set(conf_key, old)
-    except Exception:
-        return None
-    return (id(df.sparkSession), files, stats, plan, *params)
+def _pairs_key(df: DataFrame, *params) -> tuple | None:
+    """Pairs-cache key: input files, their size+mtime, the input plan
+    and `params`; None (uncached) for non-file-backed frames."""
+    sig = input_signature(df, plan=True)
+    return (sig, *params) if sig else None
 
 
 def fingerprint_expr(text: Column | str) -> Column:
@@ -213,13 +179,20 @@ def _ngram_pair_counts(
     replay the whole pipeline per consumer — including for
     non-file-backed inputs the cache skips.
     """
-    key = _pairs_cache_key(df, "counts", text_col, id_col, n, max_shingle_freq)
-    if key is not None:
-        with _DEDUP_CACHE_LOCK:
-            if key in _PAIRS_CACHE:
-                hit = _PAIRS_CACHE.pop(key)  # move-to-end: refresh recency
-                _PAIRS_CACHE[key] = hit
-                return hit
+    return session_cached(
+        df.sparkSession,
+        "dedup.pairs",
+        _pairs_key(df, "counts", text_col, id_col, n, max_shingle_freq),
+        (df,),
+        lambda: _build_pair_counts(df, text_col, id_col, n, max_shingle_freq),
+        cap=_PAIRS_CAP,
+    )
+
+
+def _build_pair_counts(
+    df: DataFrame, text_col: str, id_col: str, n: int, max_shingle_freq: int | None
+) -> DataFrame:
+    """The uncached postings pipeline behind `_ngram_pair_counts`."""
     # shingle_table spreads an under-partitioned scan across the cluster
     # (cached probe in rebalance_if_narrow); no extra probe here — the
     # raw df.rdd.getNumPartitions() this used to call compiles a fresh
@@ -270,17 +243,11 @@ def _ngram_pair_counts(
         ).alias("p")
     ).select("p.doc1", "p.n1", "p.doc2", "p.n2")
 
-    counts = pair.groupBy("doc1", "doc2").agg(
+    return pair.groupBy("doc1", "doc2").agg(
         F.count(F.lit(1)).alias("common"),
         F.first("n1").alias("n1"),
         F.first("n2").alias("n2"),
     ).localCheckpoint()
-    if key is not None:
-        with _DEDUP_CACHE_LOCK:
-            while len(_PAIRS_CACHE) >= _PAIRS_CACHE_CAP:
-                _PAIRS_CACHE.pop(next(iter(_PAIRS_CACHE)))  # evict LRU head
-            _PAIRS_CACHE[key] = counts
-    return counts
 
 
 def ngram_jaccard_pairs(
@@ -299,35 +266,32 @@ def ngram_jaccard_pairs(
     containment screen and cached per session); this is one scalar +
     filter over that checkpointed five-column table. The thresholded
     frame itself stays in the cache too so repeat callers (and the
-    connected-components memo, which keys on frame identity) get the
+    connected-components cache, which matches on this frame) get the
     same object back.
     """
-    key = _pairs_cache_key(df, "jacc", text_col, id_col, n, threshold,
-                           max_shingle_freq)
-    if key is not None:
-        with _DEDUP_CACHE_LOCK:
-            if key in _PAIRS_CACHE:
-                hit = _PAIRS_CACHE.pop(key)  # move-to-end: refresh recency
-                _PAIRS_CACHE[key] = hit
-                return hit
-    counts = _ngram_pair_counts(
-        df, text_col, id_col, n=n, max_shingle_freq=max_shingle_freq
+
+    def build() -> DataFrame:
+        counts = _ngram_pair_counts(
+            df, text_col, id_col, n=n, max_shingle_freq=max_shingle_freq
+        )
+        jaccard = F.col("common") / (F.col("n1") + F.col("n2") - F.col("common"))
+        # no second checkpoint: a narrow filter+projection over the
+        # already-checkpointed counts table — each consumer re-reads a
+        # tiny materialized table, never the postings pipeline
+        return (
+            counts.withColumn("jaccard", jaccard)
+            .filter(F.col("jaccard") >= threshold)
+            .select("doc1", "doc2", "jaccard")
+        )
+
+    return session_cached(
+        df.sparkSession,
+        "dedup.pairs",
+        _pairs_key(df, "jacc", text_col, id_col, n, threshold, max_shingle_freq),
+        (df,),
+        build,
+        cap=_PAIRS_CAP,
     )
-    jaccard = F.col("common") / (F.col("n1") + F.col("n2") - F.col("common"))
-    out = (
-        counts.withColumn("jaccard", jaccard)
-        .filter(F.col("jaccard") >= threshold)
-        .select("doc1", "doc2", "jaccard")
-    )
-    # no second checkpoint: `out` is a narrow filter+projection over the
-    # already-checkpointed counts table — each consumer re-reads a tiny
-    # materialized table, never the postings pipeline
-    if key is not None:
-        with _DEDUP_CACHE_LOCK:
-            while len(_PAIRS_CACHE) >= _PAIRS_CACHE_CAP:
-                _PAIRS_CACHE.pop(next(iter(_PAIRS_CACHE)))  # evict LRU head
-            _PAIRS_CACHE[key] = out
-    return out
 
 
 def ngram_containment_pairs(
@@ -499,37 +463,6 @@ def winnowing_fingerprint(
         "doc",
         "fingerprints",
         F.size("fingerprints").cast("long").alias("n_fingerprints"),
-    )
-
-
-def simhash_band_candidates(fps: DataFrame, band_bits: int = 16) -> DataFrame:
-    """Candidate near-dup pairs: docs sharing any of the 4 16-bit simhash
-    bands (detects pairs within Hamming distance 3 of each other with
-    certainty; standard banding argument)."""
-    bands = fps.select(
-        "doc",
-        "simhash",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("band"),
-                        F.shiftright("simhash", i * band_bits)
-                        .bitwiseAND(F.lit((1 << band_bits) - 1))
-                        .alias("key"),
-                    )
-                    for i in range(63 // band_bits + 1)
-                ]
-            )
-        ).alias("bk"),
-    ).select("doc", "simhash", F.col("bk.band").alias("band"), F.col("bk.key").alias("key"))
-    a = bands.select(F.col("doc").alias("doc1"), F.col("simhash").alias("sh1"), "band", "key")
-    b = bands.select(F.col("doc").alias("doc2"), F.col("simhash").alias("sh2"), "band", "key")
-    return (
-        a.join(b, ["band", "key"])
-        .filter(F.col("doc1") < F.col("doc2"))
-        .select("doc1", "doc2", "sh1", "sh2")
-        .distinct()
     )
 
 
@@ -735,16 +668,24 @@ def connected_components(
     Returns (node, cluster_id). Nodes appearing only on one side of a pair
     are still labeled (edges are symmetrized).
 
-    The (pairs-object, src, dst, rounds) result is memoized per session:
+    The result is session-cached per (pairs plan, src, dst, rounds):
     three registered queries run this exact fixpoint on the SAME cached
-    pairs frame (see _PAIRS_CACHE) — identity of the input frame is the
-    key, so a recomputed or differently-parameterized pairs table can
+    pairs frame (see ngram_jaccard_pairs), and the entry holds that
+    frame, so a recomputed or differently-parameterized pairs table can
     never be served a stale cluster map.
     """
-    with _DEDUP_CACHE_LOCK:
-        for p, s, d, mi, labels in _CC_CACHE:
-            if p is pairs and (s, d, mi) == (src, dst, max_iterations):
-                return labels
+    return session_cached(
+        pairs.sparkSession,
+        "dedup.clusters",
+        (pairs.semanticHash(), src, dst, max_iterations),
+        (pairs,),
+        lambda: _min_label_fixpoint(pairs, src, dst, max_iterations),
+        cap=_CC_CAP,
+    )
+
+
+def _min_label_fixpoint(pairs: DataFrame, src: str, dst: str, max_iterations: int) -> DataFrame:
+    """The uncached propagation loop behind `connected_components`."""
     edges = (
         pairs.select(F.col(src).alias("u"), F.col(dst).alias("v"))
         .union(pairs.select(F.col(dst).alias("u"), F.col(src).alias("v")))
@@ -782,10 +723,6 @@ def connected_components(
         labels = stepped.select("node", "cluster_id")
         if stepped.filter(F.col("__changed")).limit(1).count() == 0:
             break
-    with _DEDUP_CACHE_LOCK:
-        while len(_CC_CACHE) >= _CC_CACHE_CAP:
-            _CC_CACHE.pop(0)
-        _CC_CACHE.append((pairs, src, dst, max_iterations, labels))
     return labels
 
 

@@ -25,12 +25,11 @@ design choices:
 
 from __future__ import annotations
 
-import threading
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from hw_kafka_flink_health_spark.queries._registry import register
+from hw_kafka_flink_health_spark.session import input_signature, session_cached
 from hw_kafka_flink_health_spark.sources.files import load_table
 
 _SCALE = 1_000_000_000
@@ -197,8 +196,8 @@ def graph_triangle_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # The Jaccard pair pipeline is the expensive subtree and feeds the
     # degree agg, the orientation join, AND the wedge-closure join. The
-    # pairs table arrives ALREADY materialized (the session-keyed
-    # _PAIRS_CACHE checkpoint inside ngram_jaccard_pairs), so the three
+    # pairs table arrives ALREADY materialized (the session_cached
+    # checkpoint inside ngram_jaccard_pairs), so the three
     # consumers re-read a tiny checkpointed table — a second checkpoint
     # of this projection would only add a job (r12 optimization pass).
     e = dedup_ngram_jaccard(spark, sf_dir).select("doc1", "doc2")
@@ -414,20 +413,16 @@ def graph_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
 # shared by every query over the customer-supplier graph. The build (the
 # orders-lineitem join + distinct) is each graph query's single most
 # expensive subtree and is IDENTICAL across k-core / BFS / LPA /
-# assortativity / harmonic centrality — a session-scoped LRU (cap 4,
-# true recency: hits move to end) keyed by (session identity, sf_dir,
-# exact input file list) returns the same checkpointed table instead of
-# rebuilding it per query. Keying by id(spark) rather than applicationId
-# keeps a sibling `spark.newSession()` (same context, separate catalog/
-# conf) from being served a frame checkpointed under another session;
-# mutation is lock-guarded for concurrent drivers. Parquet writers name
-# part files uniquely, so overwritten data changes the signature and can
-# never serve a stale cache; the cache changes WALL TIME only, never
-# results (each consumer still derives its own projection). At 100 TB
-# this is the "materialize the edge table once" step every production
-# graph pipeline runs at ingest.
+# assortativity / harmonic centrality, so it lives in the session cache
+# (`session_cached`, label "graph.edges", at most _EDGE_CAP tables, LRU)
+# keyed by (sf_dir, table kind, input files with size+mtime) and is
+# returned as the same checkpointed table instead of being rebuilt per
+# query. The cache changes WALL TIME only, never results (each consumer
+# still derives its own projection). At 100 TB this is the "materialize
+# the edge table once" step every production graph pipeline runs at
+# ingest.
 #
-# r13: both tables are checkpointed HASH-PARTITIONED AND SORTED ON `src`
+# r13: both tables are checkpointed HASH-PARTITIONED on `src`
 # (`checkpoint_partitioned`) — the in-session analog of the bucketed
 # edge layout a production graph store keeps on disk. Every iterative
 # consumer keys its per-round join/aggregate on src, so with the layout
@@ -439,105 +434,67 @@ def graph_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
 # partitioned checkpoint because a union of two partitioned copies has
 # no partitioning. The cache changes wall time and layout only — every
 # consumer's RESULT is partitioning-independent (oracle-hash-pinned).
-_EDGE_CACHE: dict = {}
-_EDGE_CACHE_CAP = 6  # directed + undirected + cp incidence, two SF dirs
-_EDGE_CACHE_LOCK = threading.Lock()
+_EDGE_CAP = 6  # directed + undirected + cp incidence, two SF dirs
+
+
+def _orders_lineitem(spark: SparkSession, sf_dir: str, li_col: str, kind: str):
+    """The two scans a cached edge table is built from, and its cache key
+    (None when the scans have no file source)."""
+    orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
+    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", li_col)
+    sig = input_signature(orders, li)
+    return orders, li, (kind, sf_dir, sig) if sig else None
 
 
 def _cs_edges_directed(spark: SparkSession, sf_dir: str) -> DataFrame:
     from hw_kafka_flink_health_spark.sources.files import checkpoint_partitioned
 
-    orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    try:
-        from hw_kafka_flink_health_spark.sources.files import file_stats_signature
-
-        ofiles = tuple(sorted(orders.inputFiles()))
-        lfiles = tuple(sorted(li.inputFiles()))
-        sig = (
-            id(spark),
-            sf_dir,
-            "directed",
-            ofiles,
-            lfiles,
-            # size+mtime per file (ADVICE r12): fixed-name fixture files
-            # overwritten in-session must change the key
-            file_stats_signature(ofiles + lfiles),
-        )
-    except Exception:
-        sig = None
-    if sig is not None:
-        with _EDGE_CACHE_LOCK:
-            if sig in _EDGE_CACHE:
-                hit = _EDGE_CACHE.pop(sig)  # move-to-end: refresh recency
-                _EDGE_CACHE[sig] = hit
-                return hit
+    orders, li, key = _orders_lineitem(spark, sf_dir, "l_suppkey", "directed")
     # distinct over the NUMERIC pair before building node strings (the
     # measured ~25% exchange-width win recorded at graph_degree_histogram)
-    e0 = checkpoint_partitioned(
-        orders.join(li, F.col("o_orderkey") == F.col("l_orderkey"))
-        .select("o_custkey", "l_suppkey")
-        .distinct()
-        .select(
-            F.concat(F.lit("c"), F.col("o_custkey").cast("string")).alias("src"),
-            F.concat(F.lit("s"), F.col("l_suppkey").cast("string")).alias("dst"),
+    return session_cached(
+        spark,
+        "graph.edges",
+        key,
+        (orders, li),
+        lambda: checkpoint_partitioned(
+            orders.join(li, F.col("o_orderkey") == F.col("l_orderkey"))
+            .select("o_custkey", "l_suppkey")
+            .distinct()
+            .select(
+                F.concat(F.lit("c"), F.col("o_custkey").cast("string")).alias("src"),
+                F.concat(F.lit("s"), F.col("l_suppkey").cast("string")).alias("dst"),
+            ),
+            "src",
         ),
-        "src",
+        cap=_EDGE_CAP,
     )
-    if sig is not None:
-        with _EDGE_CACHE_LOCK:
-            while len(_EDGE_CACHE) >= _EDGE_CACHE_CAP:
-                _EDGE_CACHE.pop(next(iter(_EDGE_CACHE)))  # evict LRU head
-            _EDGE_CACHE[sig] = e0
-    return e0
 
 
 def _cp_incidence(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Shared distinct customer-part incidence list (c, p), checkpointed
-    hash-partitioned on p in the same session LRU as the edge tables
+    hash-partitioned on p in the same session cache as the edge tables
     (r13): `graph_adamic_adar` and `graph_jaccard_neighbors` build the
     IDENTICAL orders⋈lineitem distinct and key every downstream
     aggregate/self-join on p — with the layout pinned, the part-degree
     aggregate, the hub cap semi-join and the within-part pair self-join
     all reuse it exchange-free."""
-    from hw_kafka_flink_health_spark.sources.files import (
-        checkpoint_partitioned,
-        file_stats_signature,
-    )
+    from hw_kafka_flink_health_spark.sources.files import checkpoint_partitioned
 
-    orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    try:
-        ofiles = tuple(sorted(orders.inputFiles()))
-        lfiles = tuple(sorted(li.inputFiles()))
-        sig = (
-            id(spark),
-            sf_dir,
-            "cp",
-            ofiles,
-            lfiles,
-            file_stats_signature(ofiles + lfiles),
-        )
-    except Exception:
-        sig = None
-    if sig is not None:
-        with _EDGE_CACHE_LOCK:
-            if sig in _EDGE_CACHE:
-                hit = _EDGE_CACHE.pop(sig)
-                _EDGE_CACHE[sig] = hit
-                return hit
-    cp = checkpoint_partitioned(
-        orders.join(li, F.col("o_orderkey") == F.col("l_orderkey"))
-        .select(F.col("o_custkey").alias("c"), F.col("l_partkey").alias("p"))
-        .distinct(),
-        "p",
+    orders, li, key = _orders_lineitem(spark, sf_dir, "l_partkey", "cp")
+    return session_cached(
+        spark,
+        "graph.edges",
+        key,
+        (orders, li),
+        lambda: checkpoint_partitioned(
+            orders.join(li, F.col("o_orderkey") == F.col("l_orderkey"))
+            .select(F.col("o_custkey").alias("c"), F.col("l_partkey").alias("p"))
+            .distinct(),
+            "p",
+        ),
+        cap=_EDGE_CAP,
     )
-    if sig is not None:
-        with _EDGE_CACHE_LOCK:
-            while len(_EDGE_CACHE) >= _EDGE_CACHE_CAP:
-                _EDGE_CACHE.pop(next(iter(_EDGE_CACHE)))
-            _EDGE_CACHE[sig] = cp
-    return cp
 
 
 def _cs_edges_undirected(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -546,27 +503,25 @@ def _cs_edges_undirected(spark: SparkSession, sf_dir: str) -> DataFrame:
     tables has no partitioning, so the doubled view must be laid out
     once itself to keep the per-round joins exchange-free). No distinct
     after the union: the c*/s* namespaces are disjoint, so the two
-    directed copies of a distinct set are already globally distinct."""
+    directed copies of a distinct set are already globally distinct.
+    The cached entry holds the directed table it was built from, so a
+    rebuilt directed table never matches it."""
     from hw_kafka_flink_health_spark.sources.files import checkpoint_partitioned
 
     e0 = _cs_edges_directed(spark, sf_dir)
-    sig = (id(spark), sf_dir, "undirected", id(e0))
-    with _EDGE_CACHE_LOCK:
-        if sig in _EDGE_CACHE:
-            hit = _EDGE_CACHE.pop(sig)
-            _EDGE_CACHE[sig] = hit
-            return hit
-    ed = checkpoint_partitioned(
-        e0.unionByName(
-            e0.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+    return session_cached(
+        spark,
+        "graph.edges",
+        ("undirected", sf_dir),
+        (e0,),
+        lambda: checkpoint_partitioned(
+            e0.unionByName(
+                e0.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+            ),
+            "src",
         ),
-        "src",
+        cap=_EDGE_CAP,
     )
-    with _EDGE_CACHE_LOCK:
-        while len(_EDGE_CACHE) >= _EDGE_CACHE_CAP:
-            _EDGE_CACHE.pop(next(iter(_EDGE_CACHE)))
-        _EDGE_CACHE[sig] = ed
-    return ed
 
 
 _KCORE_K = 30

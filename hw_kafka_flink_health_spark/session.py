@@ -1,4 +1,4 @@
-"""SparkSession factory with engine-wide defaults.
+"""SparkSession factory with engine-wide defaults, and the session cache.
 
 The reference pins runtime config imperatively (parallelism=1, event-time
 characteristic, 5 s checkpoints — ``src/flink_job.py:49-59``). Here the
@@ -9,13 +9,20 @@ Scale posture: AQE on (runtime re-plan, skew-join splitting, partition
 coalescing) so the same code survives a 1000-executor cluster; shuffle
 partition count is a default for local runs and is expected to be overridden
 (or left to AQE) on a real cluster.
+
+`session_cached` is the engine's one cache of intermediate results
+(edge and near-dup pair tables, cluster maps, scan partition probes).
 """
 
 from __future__ import annotations
 
 import os
+import threading
+from collections import OrderedDict
+from typing import Callable
+from urllib.parse import unquote, urlparse
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 #: Conf bundle for the RocksDB state store provider (opt-in via
@@ -187,3 +194,72 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+# (id(spark), label, *key) -> (input frames, value), least recently used
+# first. Keying on id(spark) rather than applicationId keeps a sibling
+# `spark.newSession()` (same context, separate catalog/conf) from being
+# served a frame materialized under another session.
+_STORE: OrderedDict = OrderedDict()
+_STORE_LOCK = threading.Lock()
+
+
+def input_signature(*frames: DataFrame, plan: bool = False) -> tuple | None:
+    """Key part for a value built from `frames`: per frame, the sorted
+    input files with their (size, mtime_ns) — an in-session overwrite of
+    a fixed-name fixture file must change the key; non-local URIs stat
+    to None — plus its semanticHash if `plan`. None when a frame has no
+    file source (createDataFrame fixtures), which callers do not cache."""
+    sig = []
+    for df in frames:
+        try:
+            files = tuple(sorted(df.inputFiles()))
+        except Exception:
+            return None
+        if not files:
+            return None
+        stats = []
+        for f in files:
+            try:
+                st = os.stat(unquote(urlparse(f).path) if f.startswith("file:") else f)
+                stats.append((st.st_size, st.st_mtime_ns))
+            except OSError:
+                stats.append(None)
+        sig.append((files, tuple(stats)) + ((df.semanticHash(),) if plan else ()))
+    return tuple(sig)
+
+
+def session_cached(
+    spark: SparkSession, label: str, key: tuple | None, inputs: tuple, build: Callable, *, cap: int
+):
+    """The value cached under (id(spark), label, *key); on a miss, run
+    `build()` outside the lock and cache it, keeping the `cap` most
+    recently used entries per label. `key=None` builds without caching.
+
+    The `inputs` frames are held in the entry (pinning their ids), and a
+    hit is served only when each `is` the caller's frame or passes
+    `sameSemantics` with it, so a key collision or a reused address
+    rebuilds instead of returning a stale value. The cache changes wall
+    time only, never results."""
+    if key is None:
+        return build()
+    full = (id(spark), label, *key)
+    with _STORE_LOCK:
+        hit = _STORE.get(full)
+        if hit is not None and all(a is b or a.sameSemantics(b) for a, b in zip(hit[0], inputs)):
+            _STORE.move_to_end(full)
+            return hit[1]
+    value = build()
+    with _STORE_LOCK:
+        _STORE[full] = (tuple(inputs), value)
+        _STORE.move_to_end(full)
+        family = [k for k in _STORE if k[1] == label]
+        for k in family[: max(len(family) - cap, 0)]:
+            del _STORE[k]
+    return value
+
+
+def clear_session_cache() -> None:
+    """Drop every cached value (for tests that must see cold builds)."""
+    with _STORE_LOCK:
+        _STORE.clear()

@@ -1,8 +1,10 @@
-"""Batch file sources/sinks (reference operators S5-S7).
+"""Batch file sources (reference operators S5-S7).
 
 The reference's batch half reads JSON alert files and writes parquet/csv
-(``src/spark_batch_analysis.py:22-26``). Here the same surface is generic:
-parquet-first loaders for the synthetic star schema plus JSON/CSV helpers.
+(``src/spark_batch_analysis.py:22-26``); that job is
+``streaming/batch_analysis.py:run``. Here the surface is generic:
+parquet-first loaders for the synthetic star schema plus CSV/evolving-
+parquet readers.
 
 Scale notes:
 * Parquet scans go through Spark's vectorized reader; filters/projections
@@ -16,12 +18,13 @@ Scale notes:
 from __future__ import annotations
 
 import os
-from collections import OrderedDict
+import threading
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from hw_kafka_flink_health_spark.schemas import STAR_TABLES
+from hw_kafka_flink_health_spark.session import input_signature, session_cached
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -49,21 +52,23 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-# Scan-partitioning probe cache for rebalance_if_narrow, keyed by the
-# scan's file list PLUS the session split settings: df.rdd.
-# getNumPartitions() compiles a fresh RDD lineage for the whole plan on
-# EVERY call (~0.3s of per-query planning overhead measured at round 7),
-# while the answer only depends on the source files and the session's
-# split confs (maxPartitionBytes / openCostInBytes / defaultParallelism
-# — all in the key, so a session that retunes them mid-flight, like the
-# repartition-invariance fuzz sweep, never reads a stale probe). Narrow
-# transforms (select/filter) never change scan partitioning, so one
-# probe per distinct (files, confs) is exact for this helper's contract
-# (below). OrderedDict + LRU cap keeps a long-lived session bounded:
-# every versioned-table write changes the file set, so an uncapped dict
-# grows forever (round-7 verdict #6).
-_NARROW_PROBE_CACHE: "OrderedDict[tuple, int]" = OrderedDict()
-_NARROW_PROBE_CACHE_MAX = 256
+# Scan-partitioning probes for rebalance_if_narrow live in the session
+# cache, keyed by the scan's files (input_signature) PLUS the session
+# split settings: df.rdd.getNumPartitions() compiles a fresh RDD lineage
+# for the whole plan on EVERY call (~0.3s of per-query planning overhead
+# measured at round 7), while the answer only depends on the source
+# files and the session's split confs (maxPartitionBytes /
+# openCostInBytes / defaultParallelism — all in the key, so a session
+# that retunes them mid-flight, like the repartition-invariance fuzz
+# sweep, never reads a stale probe). Narrow transforms (select/filter)
+# never change scan partitioning, so one probe per distinct (files,
+# confs) is exact for this helper's contract (below) and the entry holds
+# no frame. The cap keeps a long-lived session bounded: every
+# versioned-table write changes the file set (round-7 verdict #6).
+_PROBE_CAP = 256
+
+# serializes checkpoint_partitioned's session-global AQE flip
+_AQE_FLIP_LOCK = threading.Lock()
 
 
 def rebalance_if_narrow(df: DataFrame) -> DataFrame:
@@ -80,66 +85,32 @@ def rebalance_if_narrow(df: DataFrame) -> DataFrame:
 
     Contract: pass a SCAN-ROOTED NARROW plan (projections/filters over one
     file source, no joins/aggregates upstream) — every in-repo caller does.
-    The partition probe is cached per file set (see _NARROW_PROBE_CACHE);
+    The partition probe is session-cached per file set (see _PROBE_CAP);
     a plan with no file source falls back to an uncached probe."""
     spark = df.sparkSession
     target = spark.sparkContext.defaultParallelism
-    try:
-        files = tuple(sorted(df.inputFiles()))
-    except Exception:
-        files = ()
+    sig = input_signature(df)
     key = None
-    if files:
-        # conf.get(key, default) VALIDATES the default against the conf
-        # type in Spark 4 — an unset conf must be probed with try, not a
-        # sentinel default
-        def _conf(k: str) -> str:
-            try:
-                return spark.conf.get(k)
-            except Exception:
-                return "<default>"
-
+    if sig:
+        # a None default skips Spark 4's type check of the default and
+        # reads an unset conf as None
         key = (
-            files,
-            _conf("spark.sql.files.maxPartitionBytes"),
-            _conf("spark.sql.files.openCostInBytes"),
+            sig,
+            spark.conf.get("spark.sql.files.maxPartitionBytes", None),
+            spark.conf.get("spark.sql.files.openCostInBytes", None),
             target,
         )
-    n = _NARROW_PROBE_CACHE.get(key) if key else None
-    if n is None:
-        n = df.rdd.getNumPartitions()
-        if key:
-            _NARROW_PROBE_CACHE[key] = n
-            if len(_NARROW_PROBE_CACHE) > _NARROW_PROBE_CACHE_MAX:
-                _NARROW_PROBE_CACHE.popitem(last=False)
-    else:
-        _NARROW_PROBE_CACHE.move_to_end(key)
+    n = session_cached(
+        spark,
+        "files.narrow_probe",
+        key,
+        (),
+        lambda: df.rdd.getNumPartitions(),
+        cap=_PROBE_CAP,
+    )
     if n >= target:
         return df
     return df.repartition(target)
-
-
-def file_stats_signature(files: tuple) -> tuple:
-    """(size, mtime_ns) per input file, for session-cache keys (ADVICE
-    r12): part names are unique per Spark/parquet WRITER, but this
-    repo's fixtures are single fixed-name files, so an in-session
-    overwrite at the same path must change the key. Non-local URIs
-    (no os.stat) contribute None — the cache then degrades to
-    name-keyed, its pre-r13 behavior."""
-    import os
-    from urllib.parse import unquote, urlparse
-
-    out = []
-    for f in files:
-        p = f
-        if p.startswith("file:"):
-            p = unquote(urlparse(p).path)
-        try:
-            st = os.stat(p)
-            out.append((st.st_size, st.st_mtime_ns))
-        except OSError:
-            out.append(None)
-    return tuple(out)
 
 
 def checkpoint_partitioned(df: DataFrame, *cols: str) -> DataFrame:
@@ -160,7 +131,8 @@ def checkpoint_partitioned(df: DataFrame, *cols: str) -> DataFrame:
       `UnknownPartitioning` (measured: the r13 LPA join re-shuffled 1.17M
       cached edge rows per round, then AQE broadcast the 15 MB edge side
       and coalesced the node-sized probe to ONE task). AQE is therefore
-      disabled around this one action and restored after.
+      disabled around this one action and restored after, under
+      `_AQE_FLIP_LOCK` so concurrent builds cannot interleave the flip.
     * The partition count is pinned to `spark.sql.shuffle.partitions` so
       EnsureRequirements recognizes the table as co-partitioned with any
       join side it plans at the session default — a mismatched count
@@ -177,12 +149,13 @@ def checkpoint_partitioned(df: DataFrame, *cols: str) -> DataFrame:
     # (local scale) or sort node-sized tables, not this one; the sort
     # measured +0.3 s per build for no downstream change (r13)
     staged = df.repartition(n, *cols)
-    old = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
-        return staged.localCheckpoint()
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", old)
+    with _AQE_FLIP_LOCK:
+        old = spark.conf.get("spark.sql.adaptive.enabled")
+        spark.conf.set("spark.sql.adaptive.enabled", "false")
+        try:
+            return staged.localCheckpoint()
+        finally:
+            spark.conf.set("spark.sql.adaptive.enabled", old)
 
 
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
@@ -193,31 +166,6 @@ def register_views(spark: SparkSession, sf_dir: str) -> None:
     """Register every synthetic table as a temp view for spark.sql()."""
     for name, df in load_tables(spark, sf_dir).items():
         df.createOrReplaceTempView(name)
-
-
-def read_json_dir(spark: SparkSession, path: str, schema=None) -> DataFrame:
-    """S6: batch-read a directory of JSON records (alert files).
-
-    Always pass a schema in production — schema inference is a full extra
-    pass over 100 TB of input.
-    """
-    reader = spark.read
-    if schema is not None:
-        reader = reader.schema(schema)
-    return reader.json(path)
-
-
-def write_parquet(df: DataFrame, path: str, mode: str = "overwrite", partition_by: list[str] | None = None) -> None:
-    """S7: parquet sink, overwrite mode like the reference batch job."""
-    writer = df.write.mode(mode)
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(path)
-
-
-def write_csv(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    """S7 (csv variant)."""
-    df.write.mode(mode).option("header", "true").csv(path)
 
 
 def read_parquet_evolved(spark: SparkSession, path: str) -> DataFrame:

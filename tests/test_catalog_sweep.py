@@ -44,14 +44,9 @@ def catalog_sweep(spark):
     # HIT and the pairs/cluster/edge subtrees would be captured ZERO
     # times — a window added inside those operators would pass the gate
     # green (review r12).
-    from hw_kafka_flink_health_spark.operators import dedup as _dd
-    from hw_kafka_flink_health_spark.queries import graph as _g
+    from hw_kafka_flink_health_spark.session import clear_session_cache
 
-    with _dd._DEDUP_CACHE_LOCK:
-        _dd._PAIRS_CACHE.clear()
-        _dd._CC_CACHE.clear()
-    with _g._EDGE_CACHE_LOCK:
-        _g._EDGE_CACHE.clear()
+    clear_session_cache()
 
     captured: list[str] = []
     entries: dict[str, dict] = {}

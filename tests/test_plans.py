@@ -117,15 +117,14 @@ def test_jaccard_postings_no_inferred_generate_filter(spark):
     re-runs construction per row — measured 5x on the postings pass.
     explode_outer + isNotNull keeps the scan clean.
 
-    The pairs pipeline is checkpointed into the session-keyed
-    _PAIRS_CACHE (r12), so the visible plan starts at Scan ExistingRDD —
-    assert on the CAPTURED pre-checkpoint executed subtree instead, the
-    same window the catalog sweep uses."""
-    from hw_kafka_flink_health_spark.operators import dedup as dd
+    The pairs pipeline is checkpointed into the session cache (r12), so
+    the visible plan starts at Scan ExistingRDD — assert on the CAPTURED
+    pre-checkpoint executed subtree instead, the same window the catalog
+    sweep uses."""
     from hw_kafka_flink_health_spark.plans import capture_checkpoints
+    from hw_kafka_flink_health_spark.session import clear_session_cache
 
-    with dd._DEDUP_CACHE_LOCK:
-        dd._PAIRS_CACHE.clear()
+    clear_session_cache()
     captured: list = []
     executed: list = []
     with capture_checkpoints(captured, executed):
@@ -916,11 +915,23 @@ def test_grubbs_stats_broadcast_back(spark):
     assert "SortMergeJoin" not in plan, plan
 
 
+def _jaccard_pairs(df, n: int = 3):
+    from hw_kafka_flink_health_spark.operators.dedup import ngram_jaccard_pairs
+
+    return ngram_jaccard_pairs(df, "text", "doc_id", n=n, threshold=0.2)
+
+
 def test_shared_edge_cache_hits_and_keys_by_input(spark):
     """The graph edge cache must return the SAME checkpointed frame for
     repeated (session, sf_dir, files) keys — and never serve one sf_dir's
-    edges for another."""
+    edges for another. The near-dup pairs cache, second case, keys on the
+    input plan: the same input hits, a differently filtered frame over
+    the same files misses, and so do two wide plans that differ only
+    past field 25 (where the default plan render truncates)."""
+    from pyspark.sql import functions as F
+
     from hw_kafka_flink_health_spark.queries.graph import _cs_edges_directed
+    from hw_kafka_flink_health_spark.sources.files import load_table
 
     a1 = _cs_edges_directed(spark, SF)
     a2 = _cs_edges_directed(spark, SF)
@@ -928,6 +939,128 @@ def test_shared_edge_cache_hits_and_keys_by_input(spark):
     b = _cs_edges_directed(spark, "/root/testdata/sf0.01")
     assert b is not a1, "different sf_dir must miss"
     assert a1.count() != b.count()
+
+    docs = load_table(spark, SF, "documents")
+    p1 = _jaccard_pairs(docs)
+    assert _jaccard_pairs(load_table(spark, SF, "documents")) is p1, (
+        "same input must hit the cache"
+    )
+    assert _jaccard_pairs(docs.filter(F.col("doc_id") % 2 == 0)) is not p1, (
+        "a differently filtered frame must miss"
+    )
+
+    def wide(v: int):
+        cols = [F.lit(v if i == 30 else i).alias(f"c{i}") for i in range(40)]
+        return docs.select("doc_id", "text", *cols)
+
+    w1 = _jaccard_pairs(wide(30))
+    assert _jaccard_pairs(wide(99)) is not w1, "plans differing past field 25 must miss"
+    assert _jaccard_pairs(wide(30)) is w1, "a wide plan must still hit"
+
+
+def test_edge_cache_pins_the_directed_table_of_an_undirected_entry(spark, tmp_path):
+    """The undirected edge table is cached against the directed table it
+    was built from, so its entry must keep that table alive. An entry
+    that kept only its id() let the table be freed once the directed
+    entry was evicted, and a rebuilt directed table could then reuse the
+    address and be served the stale undirected edges (ADVICE r13)."""
+    import gc
+    import shutil
+    import weakref
+
+    from hw_kafka_flink_health_spark.queries import graph as g
+
+    e0 = g._cs_edges_directed(spark, SF)
+    g._cs_edges_undirected(spark, SF)  # LRU order: ..., directed, undirected
+    ref = weakref.ref(e0)
+    del e0
+    dirs = []
+    for i in range(2):
+        d = tmp_path / f"sf{i}"
+        d.mkdir()
+        for t in ("orders", "lineitem"):
+            shutil.copy(f"{SF}/{t}.parquet", d / f"{t}.parquet")
+        dirs.append(str(d))
+    # five new entries in the six-table cache evict the SF directed entry
+    # and keep the SF undirected one
+    g._cs_edges_undirected(spark, dirs[0])  # directed + undirected
+    g._cp_incidence(spark, dirs[0])
+    g._cs_edges_directed(spark, dirs[1])
+    g._cp_incidence(spark, dirs[1])
+    gc.collect()
+    assert ref() is not None, "the cached undirected entry must hold its directed table"
+    assert g._cs_edges_directed(spark, SF) is not ref(), "directed entry not evicted"
+
+
+def test_session_cache_stays_bounded_under_concurrent_use():
+    """Many threads hitting and filling one label: every call returns the
+    value built for its own key, and the label never holds more than its
+    cap once the threads are done."""
+    import sys
+    from concurrent.futures import ThreadPoolExecutor
+
+    from hw_kafka_flink_health_spark import session
+
+    owner = object()  # stands in for a SparkSession: only its id() is keyed
+
+    def call(i: int) -> tuple:
+        k = i % 7
+        return k, session.session_cached(owner, "test.stress", (k,), (), lambda: k * 10, cap=3)
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        with ThreadPoolExecutor(16) as pool:
+            results = [f.result(timeout=60) for f in [pool.submit(call, i) for i in range(2000)]]
+    finally:
+        sys.setswitchinterval(interval)
+    assert all(v == k * 10 for k, v in results)
+    with session._STORE_LOCK:
+        held = [k for k in session._STORE if k[:2] == (id(owner), "test.stress")]
+    assert 1 <= len(held) <= 3, held
+
+
+def test_session_cache_is_the_only_cache_store():
+    """One session cache: no package module but session.py may keep its
+    own store (an OrderedDict, popitem/move_to_end LRU bookkeeping, or a
+    module-level _*_CACHE dict or list) — new caches go through
+    session_cached."""
+    import ast
+    import pathlib
+
+    import hw_kafka_flink_health_spark as pkg
+
+    root = pathlib.Path(pkg.__file__).parent
+    offenders = []
+    for path in sorted(root.rglob("*.py")):
+        if path == root / "session.py":
+            continue
+        rel = path.relative_to(root)
+        src = path.read_text()
+        offenders += [
+            f"{rel}: {n}" for n in ("OrderedDict(", "popitem(", "move_to_end(") if n in src
+        ]
+        for node in ast.parse(src).body:
+            if isinstance(node, ast.Assign):
+                targets = node.targets
+            elif isinstance(node, ast.AnnAssign):
+                targets = [node.target]
+            else:
+                continue
+            value = node.value
+            is_store = isinstance(value, (ast.Dict, ast.List)) or (
+                isinstance(value, ast.Call)
+                and isinstance(value.func, ast.Name)
+                and value.func.id in ("dict", "list", "defaultdict")
+            )
+            offenders += [
+                f"{rel}: {t.id}"
+                for t in targets
+                if isinstance(t, ast.Name)
+                and re.fullmatch(r"_\w*_CACHE", t.id)
+                and is_store
+            ]
+    assert not offenders, offenders
 
 
 def test_no_single_partition_window_over_fact_cardinality(spark):
@@ -986,12 +1119,22 @@ def test_shared_edge_cache_is_lru_not_fifo(spark):
     least-recently-INSERTED) — cycling sf_dirs would otherwise rebuild
     the checkpointed edge list on every call (ADVICE r9)."""
     from hw_kafka_flink_health_spark.queries import graph as g
+    from hw_kafka_flink_health_spark.sources.files import load_table
 
     a = g._cs_edges_directed(spark, SF)                      # insert A
     g._cs_edges_directed(spark, "/root/testdata/sf0.01")     # insert B
     assert g._cs_edges_directed(spark, SF) is a              # touch A
     g._cs_edges_directed(spark, "/root/testdata/sf0.1")      # insert C -> evict B
     assert g._cs_edges_directed(spark, SF) is a, "A must survive (was MRU)"
+
+    # the pairs cache (4 entries; a jaccard call holds two: its count
+    # table and the thresholded frame, and a hit touches only the latter)
+    docs = load_table(spark, SF, "documents")
+    a = _jaccard_pairs(docs, n=2)                            # insert A: [cA jA]
+    _jaccard_pairs(docs, n=4)                                # insert B: [cA jA cB jB]
+    assert _jaccard_pairs(docs, n=2) is a                    # touch A: [cA cB jB jA]
+    _jaccard_pairs(docs, n=5)                                # insert C -> evict cA, cB
+    assert _jaccard_pairs(docs, n=2) is a, "A must survive (was MRU)"
 
 
 def test_bh_fdr_broadcasts_obs_stats_into_replicates(spark):
