@@ -6,10 +6,21 @@ Reference contract (``src/flink_job.py:19-32``, ``README`` Part 2,
 or ``None`` on ANY error (non-JSON, missing field, bad timestamp).
 
 Engine path: pure Catalyst expressions — ``from_json`` (PERMISSIVE: null
-struct on malformed input) + ``to_timestamp`` + ``unix_millis``, then a
-null-conjunction filter. That reproduces the None contract with zero
+fields on malformed input) + ``try_to_timestamp`` + ``unix_millis``, then
+a null-conjunction filter. That reproduces the None contract with zero
 Python in the hot path; at 100 TB the difference between this and a
 row-at-a-time Python UDF is the whole job.
+
+Each record is parsed by exactly ONE ``from_json``, placed behind a
+Generate (``inline(array(from_json(raw)))``). Written as plain per-field
+``parsed["x"]`` accesses, the optimizer multiplies the parse: its JSON
+expression rule splits the struct into one single-field ``from_json`` per
+field read, and filter pushdown copies those calls into the validity
+``Filter`` — 7 ``from_json`` calls per record in the optimized
+``parse_events_df`` plan (5 in ``annotate_df``), each tokenising the whole
+payload. Catalyst neither splits a Generate's input per field nor pushes a
+filter on generator output below the Generate, so the fields are read from
+the single parsed struct. ``tests/test_plans.py`` pins the single call.
 
 A pure-Python twin (`parse_event`) is kept ONLY for unit-test parity with
 the reference's pytest contract; it is not used by any engine operator.
@@ -49,32 +60,6 @@ def parse_event(value: str) -> dict | None:
         return None
 
 
-def parsed_event_cols(raw: Column) -> list[Column]:
-    """Catalyst expression set implementing parse_event on a raw-JSON column.
-
-    Produces `patient_id`, `heart_rate_bpm`, `event_time` (epoch millis,
-    long) and `event_ts` (TimestampType — the streaming watermark column).
-    Malformed JSON / missing fields / unparseable timestamps all yield
-    nulls, which `valid_filter` drops — the None contract.
-
-    ISO8601 nuance: the producer emits `+00:00` offsets
-    (src/kafka_producer.py:25) while the README shows `Z`; timestamp
-    parsing with session TZ UTC accepts both. `try_to_timestamp` (not
-    `to_timestamp`) is load-bearing: under Spark 4's default ANSI mode a
-    malformed timestamp string would THROW and kill the job — try_ yields
-    null, which the validity filter drops, i.e. the reference's
-    None-on-bad-timestamp contract (found by Hypothesis fuzzing).
-    """
-    parsed = F.from_json(raw, HEART_RATE_EVENT_SCHEMA)
-    ts = F.try_to_timestamp(parsed["timestamp"])
-    return [
-        parsed["patient_id"].alias("patient_id"),
-        parsed["heart_rate_bpm"].alias("heart_rate_bpm"),
-        F.unix_millis(ts).alias("event_time"),
-        ts.alias("event_ts"),
-    ]
-
-
 def valid_filter() -> Column:
     """P4: drop records where any required field failed to parse."""
     return (
@@ -87,32 +72,63 @@ def valid_filter() -> Column:
 def parse_events_df(raw_df: DataFrame, raw_col: str = "raw") -> DataFrame:
     """P1+P3+P4 fused: raw JSON strings -> validated typed events.
 
-    Works identically on batch and streaming DataFrames (unified API).
+    Produces `patient_id`, `heart_rate_bpm`, `event_time` (epoch millis,
+    long) and `event_ts` (TimestampType — the streaming watermark column).
+    Malformed JSON / missing fields / unparseable timestamps all yield
+    nulls, which `valid_filter` drops — the None contract. Works
+    identically on batch and streaming DataFrames (unified API).
+
+    The payload is parsed once per record behind a Generate (module
+    docstring): `inline` of a one-element array emits the struct's fields
+    as columns (a null struct becomes an all-null row), and everything
+    below reads those columns instead of re-parsing.
+
+    ISO8601 nuance: the producer emits `+00:00` offsets
+    (src/kafka_producer.py:25) while the README shows `Z`; timestamp
+    parsing with session TZ UTC accepts both. `try_to_timestamp` (not
+    `to_timestamp`) is load-bearing: under Spark 4's default ANSI mode a
+    malformed timestamp string would THROW and kill the job — try_ yields
+    null, which the validity filter drops, i.e. the reference's
+    None-on-bad-timestamp contract (found by Hypothesis fuzzing).
     """
-    return raw_df.select(*parsed_event_cols(F.col(raw_col))).filter(valid_filter())
+    fields = raw_df.select(
+        F.inline(F.array(F.from_json(F.col(raw_col), HEART_RATE_EVENT_SCHEMA)))
+    )
+    ts = F.try_to_timestamp(F.col("timestamp"))
+    return fields.select(
+        "patient_id",
+        "heart_rate_bpm",
+        F.unix_millis(ts).alias("event_time"),
+        ts.alias("event_ts"),
+    ).filter(valid_filter())
 
 
 def annotate_df(raw_df: DataFrame, raw_col: str = "raw", processed_by: str = "spark-engine") -> DataFrame:
     """P2: the hello-world map (src/hello_flink_job.py:41-52).
 
     Parse JSON, add `processed_by`, re-serialize; on decode error fall back
-    to wrapping the raw string — `coalesce` reproduces the reference's
-    try/except fallback declaratively.
+    to wrapping the raw string — `when`/`otherwise` reproduces the reference's
+    try/except fallback declaratively. One `from_json` per record behind a
+    Generate, as in `parse_events_df`; the generated fields get private
+    names so they cannot clash with the caller's pass-through columns.
     """
-    parsed = F.from_json(F.col(raw_col), HELLO_MESSAGE_SCHEMA)
+    names = [f"__hello_{f.name}" for f in HELLO_MESSAGE_SCHEMA.fields]
+    msg_id, message, timestamp = (F.col(n) for n in names)
+    fields = raw_df.select(
+        "*",
+        F.inline(F.array(F.from_json(F.col(raw_col), HELLO_MESSAGE_SCHEMA))).alias(*names),
+    )
     annotated = F.to_json(
         F.struct(
-            parsed["id"].alias("id"),
-            parsed["message"].alias("message"),
-            parsed["timestamp"].alias("timestamp"),
+            msg_id.alias("id"),
+            message.alias("message"),
+            timestamp.alias("timestamp"),
             F.lit(processed_by).alias("processed_by"),
         )
     )
     fallback = F.to_json(
         F.struct(F.col(raw_col).alias("raw"), F.lit(processed_by).alias("processed_by"))
     )
-    value = F.when(
-        parsed["id"].isNotNull() | parsed["message"].isNotNull(), annotated
-    ).otherwise(fallback)
+    value = F.when(msg_id.isNotNull() | message.isNotNull(), annotated).otherwise(fallback)
     # non-raw columns pass through (lets callers keep a row identity)
-    return raw_df.withColumn("value", value).drop(raw_col)
+    return fields.withColumn("value", value).drop(raw_col, *names)

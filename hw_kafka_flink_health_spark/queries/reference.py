@@ -159,9 +159,10 @@ def hr_parse_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
     )
-    # the to_json synthesis + from_json parse both run in the scan stage
-    # (pure narrow plan): spread the under-partitioned events scan BEFORE
-    # the synthesis expression (guide §2.5, r12) — rebalancing the
+    # the to_json synthesis and the single from_json parse (a Generate,
+    # narrow like the projections around it) add no shuffle, so they
+    # would run in the scan stage: spread the under-partitioned events
+    # scan BEFORE the synthesis expression (guide §2.5, r12) — rebalancing the
     # synthesized strings instead left to_json single-task below the
     # exchange (measured slower). Values are row-local, so the result is
     # partition-invariant and the reference goldens are untouched.

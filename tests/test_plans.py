@@ -70,6 +70,29 @@ def test_parse_pipeline_stays_jvm_side(spark):
         assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan, name
 
 
+def test_parse_runs_one_from_json_per_record(spark):
+    """Written as per-field struct accesses, the optimizer splits the parse
+    into one single-field from_json per field and copies them into the
+    pushed validity filter (7 calls in parse_events_df, 5 in annotate_df),
+    each tokenising the whole payload. Behind a Generate it stays one."""
+    from hw_kafka_flink_health_spark.functions.parsing import annotate_df, parse_events_df
+    from hw_kafka_flink_health_spark.streaming.health_pipeline import build_streaming_job
+
+    events = spark.createDataFrame(
+        [('{"patient_id": "p1", "timestamp": "2025-11-19T07:15:23+00:00", "heart_rate_bpm": 80}',)],
+        "raw string",
+    )
+    hello = spark.createDataFrame([(1, '{"id": 1, "message": "hi"}')], "event_id long, raw string")
+    plans = {
+        "parse_events_df": parse_events_df(events),
+        "build_streaming_job": build_streaming_job(events, as_json=False),
+        "annotate_df": annotate_df(hello),
+    }
+    for name, df in plans.items():
+        optimized = df._jdf.queryExecution().optimizedPlan().toString()
+        assert optimized.count("from_json(") == 1, (name, optimized)
+
+
 def test_cosine_topk_broadcasts_queries(spark):
     plan = plan_of(spark, "embedding_cosine_topk")
     # query set broadcast: corpus side is never shuffled for the join

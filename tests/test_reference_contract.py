@@ -55,17 +55,34 @@ def test_classify_boundaries_strict():
 # --- engine path: same contract through Catalyst expressions ---
 
 
+#: Inputs where a JSON decoder's corner cases could split the engine from
+#: the twin; each expectation is whatever `parse_event` returns.
+EDGE_CASES = [
+    None,
+    "",
+    "[1, 2]",
+    '{"patient_id": "p002", "timestamp": "2025-11-19T07:15:23+00:00", "heart_rate_bpm": 90, "device": {"fw": [1, {"rev": null}]}}',
+    '{"patient_id": 123, "timestamp": "2025-11-19T07:15:24+00:00", "heart_rate_bpm": 91}',
+    '{"patient_id": "first", "patient_id": "last", "timestamp": "2025-11-19T07:15:25+00:00", "heart_rate_bpm": 92}',
+    '{"patient_id": null, "timestamp": "2025-11-19T07:15:26+00:00", "heart_rate_bpm": 93}',
+    '{"patient_id": "p003", "timestamp": "not-a-time", "heart_rate_bpm": 94}',
+]
+
+
 def test_engine_parse_matches_contract(spark):
-    raw = spark.createDataFrame(
-        [(VALID,), ("not-json",), ('{"patient_id": "p001"}',)], ["raw"]
+    inputs = [VALID, "not-json", '{"patient_id": "p001"}', *EDGE_CASES]
+    raw = spark.createDataFrame([(v,) for v in inputs], "raw string")
+    got = sorted(
+        (r.patient_id, r.heart_rate_bpm, r.event_time) for r in parse_events_df(raw).collect()
     )
-    rows = parse_events_df(raw).collect()
-    assert len(rows) == 1  # invalid rows dropped (None contract)
-    r = rows[0]
-    assert r.patient_id == "p001"
-    assert r.heart_rate_bpm == 85
-    py = parse_event(VALID)
-    assert r.event_time == py["event_time"]
+    twins = [parse_event(v) for v in inputs]
+    want = sorted(
+        (ev["patient_id"], ev["heart_rate_bpm"], ev["event_time"]) for ev in twins if ev is not None
+    )
+    # invalid rows dropped (None contract); the twin keeps VALID, the
+    # nested-extra record, the numeric id as "123" and the last duplicate key
+    assert [p for p, _, _ in want] == ["123", "last", "p001", "p002"]
+    assert got == want
 
 
 def test_engine_parse_accepts_z_suffix(spark):
