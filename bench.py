@@ -637,10 +637,11 @@ def main() -> None:
     # Position-controlled streaming probe (VERDICT r12 #7): the
     # historical `streaming_alert_pipeline` entry runs LAST, after ~295
     # queries of accumulated load, and has read ~2x its solo time since
-    # r11. This FIRST-slot run of the identical pipeline is an ADDED
-    # entry (the last-slot one keeps its name and position so
-    # round-over-round comparison stays apples-to-apples); the pair
-    # measures the position artifact directly inside every record.
+    # r11. This FIRST-slot run of the identical pipeline measures the
+    # position artifact directly inside every record (the last-slot one
+    # keeps its name and position). It is summed into `value` like every
+    # other entry: records from r13 on include it and compare like with
+    # like; r12 and earlier lack it, so compare those on common queries.
     timings["streaming_alert_pipeline_first"] = bench_streaming(spark)
     for name in names:
         # time construction + execution: iterative operators (connected
@@ -682,6 +683,9 @@ def main() -> None:
         "load_avg_start": LOAD_AVG_START,
         "load_avg_end": load_end,
         "n_cpus": os.cpu_count(),
+        # the cores Spark actually schedules on (local[SPARK_GRAFT_CPUS]),
+        # which need not equal the box's n_cpus
+        "spark_cores": spark.sparkContext.defaultParallelism,
         "fingerprint": {**fingerprint, "cpu_score_mib_s_post": _cpu_score()},
     }
     # SPARK_GRAFT_BENCH_DETAIL redirects the detail artifact: the bench

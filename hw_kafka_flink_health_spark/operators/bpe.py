@@ -29,6 +29,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from hw_kafka_flink_health_spark.sources.files import materialize
+
 
 def _merge_expr(sym: Column, a: str, b: str) -> Column:
     """Fold that merges every left-to-right non-overlapping (a, b) into
@@ -65,13 +67,12 @@ def bpe_train(
     pair count over it."""
     from hw_kafka_flink_health_spark.operators.dedup import norm_tokens_expr
 
-    words = (
+    words = materialize(
         docs.select(F.explode(norm_tokens_expr(text_col)).alias("word"))
         .filter(F.col("word") != "")
         .groupBy("word")
         .agg(F.count(F.lit(1)).alias("freq"))
         .select(F.split("word", "").alias("sym"), "freq")
-        .localCheckpoint(eager=True)
     )
     merges: list[tuple[str, str]] = []
     for _ in range(n_merges):
@@ -97,9 +98,9 @@ def bpe_train(
             break
         a, b = pairs[0]["pair"]["a"], pairs[0]["pair"]["b"]
         merges.append((a, b))
-        words = words.select(
-            _merge_expr(F.col("sym"), a, b).alias("sym"), "freq"
-        ).localCheckpoint(eager=True)
+        words = materialize(
+            words.select(_merge_expr(F.col("sym"), a, b).alias("sym"), "freq")
+        )
     return merges
 
 

@@ -26,6 +26,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from hw_kafka_flink_health_spark.session import input_signature, session_cached
+from hw_kafka_flink_health_spark.sources.files import materialize
 
 # The near-dup PAIRS table and its connected-components cluster map live
 # in the session cache (`session_cached`): five registered queries build
@@ -41,14 +42,6 @@ from hw_kafka_flink_health_spark.session import input_signature, session_cached
 # the cache only stops the SAME session recomputing the same
 # intermediate five times. Non-file-backed inputs (test/fuzz frames from
 # createDataFrame) have no inputFiles and skip caching entirely.
-#
-# Deployment note (ADVICE r12): cached frames are localCheckpoint-backed,
-# i.e. executor-local non-replicated blocks. On a LOCAL master (this
-# engine's driver contract) the blocks live as long as the session; on a
-# multi-executor deployment with dynamic allocation, an executor loss
-# would make every later cache hit fail on missing blocks rather than
-# recompute — port the cache to reliable checkpoint() (or catch the
-# block-fetch failure and invalidate) before running it off local mode.
 _PAIRS_CAP = 4
 _CC_CAP = 2
 
@@ -243,11 +236,11 @@ def _build_pair_counts(
         ).alias("p")
     ).select("p.doc1", "p.n1", "p.doc2", "p.n2")
 
-    return pair.groupBy("doc1", "doc2").agg(
+    return materialize(pair.groupBy("doc1", "doc2").agg(
         F.count(F.lit(1)).alias("common"),
         F.first("n1").alias("n1"),
         F.first("n2").alias("n2"),
-    ).localCheckpoint()
+    ))
 
 
 def ngram_jaccard_pairs(
@@ -686,15 +679,14 @@ def connected_components(
 
 def _min_label_fixpoint(pairs: DataFrame, src: str, dst: str, max_iterations: int) -> DataFrame:
     """The uncached propagation loop behind `connected_components`."""
-    edges = (
+    edges = materialize(
         pairs.select(F.col(src).alias("u"), F.col(dst).alias("v"))
         .union(pairs.select(F.col(dst).alias("u"), F.col(src).alias("v")))
         .distinct()
-        .localCheckpoint(eager=True)
     )
-    labels = edges.select("u").distinct().select(
+    labels = materialize(edges.select("u").distinct().select(
         F.col("u").alias("node"), F.col("u").alias("cluster_id")
-    ).localCheckpoint(eager=True)
+    ))
     for _ in range(max_iterations):
         neighbor_min = (
             edges.join(labels, edges.v == labels.node)
@@ -706,7 +698,7 @@ def _min_label_fixpoint(pairs: DataFrame, src: str, dst: str, max_iterations: in
         # did-anything-change probe is a filter on the checkpointed
         # result — not the extra labels-vs-new-labels join per round the
         # naive form pays.
-        stepped = (
+        stepped = materialize(
             labels.join(neighbor_min, "node", "left")
             .select(
                 "node",
@@ -718,7 +710,6 @@ def _min_label_fixpoint(pairs: DataFrame, src: str, dst: str, max_iterations: in
                     & (F.col("nbr_min") < F.col("cluster_id"))
                 ).alias("__changed"),
             )
-            .localCheckpoint(eager=True)
         )
         labels = stepped.select("node", "cluster_id")
         if stepped.filter(F.col("__changed")).limit(1).count() == 0:

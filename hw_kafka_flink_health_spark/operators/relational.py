@@ -19,6 +19,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from hw_kafka_flink_health_spark.sources.files import materialize
+
 
 def asof_join(
     left: DataFrame,
@@ -444,11 +446,10 @@ def _prefix_scan_arrow(
     ship_package(df.sparkSession)
     n = n_partitions or df.sparkSession.sparkContext.defaultParallelism
     cols = [F.col(c) if isinstance(c, str) else c for c in order_cols]
-    staged = (
+    staged = materialize(
         df.repartitionByRange(n, *cols)
         .sortWithinPartitions(*cols)
         .withColumn("_pid", F.spark_partition_id())
-        .localCheckpoint()
     )
     agg_fn = {"sum": F.sum, "max": F.max, "min": F.min}
     totals = staged.groupBy("_pid").agg(
@@ -592,7 +593,7 @@ def _prefix_scan_window(
         local = local.withColumn(f"_ls_{i}", win_fn[op](vc).over(wloc))
     # Pin ONE materialization: RangePartitioner samples its boundaries,
     # so the offsets job and the final job must agree on the cut.
-    local = local.localCheckpoint()
+    local = materialize(local)
     # Partition carry = the column's FULL-partition aggregate (for sum:
     # the partition total — max(_ls) would be wrong for signed values).
     agg_fn = {"sum": F.sum, "max": F.max, "min": F.min}
@@ -741,7 +742,7 @@ def distributed_row_number(
         )
     # Pin one materialization: RangePartitioner samples its boundaries,
     # so the counts job and the final job must see the SAME cut.
-    local = _range_local_row_number(df, order_cols, n_partitions).localCheckpoint()
+    local = materialize(_range_local_row_number(df, order_cols, n_partitions))
     counts = local.groupBy("_pid").agg(F.count(F.lit(1)).alias("_pcount")).collect()
     offsets = {}
     acc = 0

@@ -23,6 +23,8 @@ from functools import reduce
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from hw_kafka_flink_health_spark.sources.files import materialize
+
 
 # Driver-side collects of the ANN query set / training sample are bounded
 # by contract: the broadcast-small-side assumption. The guard fails fast
@@ -1018,7 +1020,7 @@ def semdedup_det(
         .filter(F.col("rn") == 1)
         .select(id_col, "cid")
     )
-    av = assigned.join(v, id_col).localCheckpoint()
+    av = materialize(assigned.join(v, id_col))
     a = av.select(
         "cid", F.col(id_col).alias("id1"), F.col("ve").alias("v1"),
         F.col("nv").alias("n1"),

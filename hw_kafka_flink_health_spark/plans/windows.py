@@ -15,6 +15,8 @@ from __future__ import annotations
 
 import contextlib
 
+from hw_kafka_flink_health_spark.session import conf_override
+
 
 @contextlib.contextmanager
 def capture_checkpoints(captured: list, executed: list | None = None):
@@ -25,54 +27,33 @@ def capture_checkpoints(captured: list, executed: list | None = None):
     (physical) plan text is appended there too, for shape tests that
     need to see exchanges behind a checkpoint.
 
-    MUST patch the CONCRETE class: on Spark 4, DataFrame instances are
+    Patches the CONCRETE class: on Spark 4, DataFrame instances are
     ``pyspark.sql.classic.dataframe.DataFrame``, which defines its OWN
-    ``localCheckpoint`` — patching only the ``pyspark.sql.DataFrame``
-    base is a silent no-op (instance lookup never reaches the base
-    attribute). The r11 sweep's capture never fired for exactly this
-    reason; found in r12 when ``stats_kruskal_wallis``'s runtime
-    single-partition WARN contradicted an empty capture list. Every
-    class in the MRO chain that defines the method is patched with its
-    own original, and restored on exit.
+    ``localCheckpoint`` — patching the ``pyspark.sql.DataFrame`` base is
+    a silent no-op (instance lookup never reaches the base attribute).
+    The r11 sweep's capture never fired for exactly this reason; found
+    in r12 when ``stats_kruskal_wallis``'s runtime single-partition WARN
+    contradicted an empty capture list.
     """
-    targets = [("pyspark.sql", "DataFrame")]
-    try:
-        from pyspark.sql.classic import dataframe as _classic  # noqa: F401
+    from pyspark.sql.classic.dataframe import DataFrame
 
-        targets.append(("pyspark.sql.classic.dataframe", "DataFrame"))
-    except ImportError:  # older line without the classic split
-        pass
-    import importlib
+    orig = DataFrame.localCheckpoint
 
-    patched: list[tuple[type, object]] = []
-    for mod_name, cls_name in targets:
-        cls = getattr(importlib.import_module(mod_name), cls_name)
-        orig = cls.__dict__.get("localCheckpoint")
-        if orig is None:
-            continue
+    # signature-transparent: PySpark 4.1's localCheckpoint is (self,
+    # eager=True, storageLevel=None) — a fixed (self, eager) wrapper
+    # would TypeError on storageLevel and turn a legitimate build into a
+    # spurious BUILD_ERROR (review r12)
+    def capturing(self, *args, **kwargs):
+        captured.append(analyzed_str(self))
+        if executed is not None:
+            executed.append(str(self._jdf.queryExecution().executedPlan()))
+        return orig(self, *args, **kwargs)
 
-        def make(orig_fn):
-            # signature-transparent: PySpark 4.1's localCheckpoint is
-            # (self, eager=True, storageLevel=None) — a fixed (self,
-            # eager) wrapper would TypeError on storageLevel and turn a
-            # legitimate build into a spurious BUILD_ERROR (review r12)
-            def capturing(self, *args, **kwargs):
-                captured.append(analyzed_str(self))
-                if executed is not None:
-                    executed.append(
-                        str(self._jdf.queryExecution().executedPlan())
-                    )
-                return orig_fn(self, *args, **kwargs)
-
-            return capturing
-
-        setattr(cls, "localCheckpoint", make(orig))
-        patched.append((cls, orig))
+    DataFrame.localCheckpoint = capturing
     try:
         yield captured
     finally:
-        for cls, orig in patched:
-            setattr(cls, "localCheckpoint", orig)
+        DataFrame.localCheckpoint = orig
 
 
 def split_top_level(s: str) -> list[str]:
@@ -105,23 +86,12 @@ def analyzed_str(df) -> str:
     negative (``stats_kruskal_wallis``'s single-partition value-rank
     window evaded the r11 gate exactly this way: the WARN fired at
     runtime while the captured plan text showed no window at all).
-    Raise the cap around the render; restore afterwards so PLANS.md
-    dumps and log lines keep their readable width.
+    Raise the cap around the render (``conf_override`` restores it, so
+    PLANS.md dumps and log lines keep their readable width).
     """
-    spark = df.sparkSession
     key = "spark.sql.debug.maxToStringFields"
-    try:
-        old = spark.conf.get(key)
-    except Exception:  # unset → provider raises in some versions
-        old = None
-    spark.conf.set(key, "2147483647")
-    try:
+    with conf_override(df.sparkSession, key, "2147483647"):
         return str(df._jdf.queryExecution().analyzed())
-    finally:
-        if old is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, old)
 
 
 def unpartitioned_specs(plan: str) -> list[str]:

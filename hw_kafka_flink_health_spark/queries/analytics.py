@@ -16,7 +16,7 @@ from pyspark.sql import functions as F
 
 from hw_kafka_flink_health_spark.operators.relational import distributed_ntile
 from hw_kafka_flink_health_spark.queries._registry import register
-from hw_kafka_flink_health_spark.sources.files import load_table
+from hw_kafka_flink_health_spark.sources.files import load_table, materialize
 
 
 @register(
@@ -651,13 +651,11 @@ def basket_frequent_itemsets(spark: SparkSession, sf_dir: str) -> DataFrame:
     part = load_table(spark, sf_dir, "part").select("p_partkey", "p_brand")
     # one exchange: per-order sorted distinct brand array; checkpointed —
     # the basket-count scalar and the combo explode both consume it.
-    # checkpoint_partitioned on the groupBy key adds NO exchange (the
-    # aggregate already hash-partitions on it) — it pins the checkpoint
-    # at full parallelism so the combo-explode stage is not confined to
-    # the handful of partitions AQE coalesces the tiny agg output into
-    from hw_kafka_flink_health_spark.sources.files import checkpoint_partitioned
-
-    baskets = checkpoint_partitioned(
+    # Materializing on the groupBy key adds NO exchange (the aggregate
+    # already hash-partitions on it) — it pins the checkpoint at full
+    # parallelism so the combo-explode stage is not confined to the
+    # handful of partitions AQE coalesces the tiny agg output into
+    baskets = materialize(
         li.join(part, F.col("l_partkey") == F.col("p_partkey"))
         .groupBy("l_orderkey")
         .agg(F.array_sort(F.array_distinct(F.collect_list("p_brand"))).alias("bs")),
@@ -1822,14 +1820,13 @@ def attribution_shapley(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     conv = masks_u.groupBy("mask").agg(F.count(F.lit(1)).cast("bigint").alias("cnt"))
     t = spark.range(16).select(F.col("id").alias("tm"))
-    v = (
+    v = materialize(
         t.join(F.broadcast(conv), F.expr("(mask & tm) = mask"), "left")
         .groupBy("tm")
         .agg(F.coalesce(F.sum("cnt"), F.lit(0)).alias("v"))
         # 16-row coalition-value table, broadcast TWICE below (v0/v1):
         # unmaterialized, each broadcast re-ran the whole events mask
         # aggregation (4 events scans in the executed plan; 2 after — r12)
-        .localCheckpoint()
     )
     ch = spark.createDataFrame(_SHAP_CHANNELS, "channel string, bit long")
     w24 = F.expr(
@@ -2740,20 +2737,18 @@ def events_markov_stationary(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("j").isNotNull())
     )
     tr = nxt.groupBy("i", "j").agg(F.count(F.lit(1)).cast("long").alias("n"))
-    states = tr.select("i").distinct().localCheckpoint()
+    states = materialize(tr.select("i").distinct())
     rs = Window.partitionBy("i")
     p = tr.select(
         "i", "j", (F.col("n").cast("double") / F.sum("n").over(rs)).alias("p")
     )
-    p2 = p.join(
-        states.select(F.col("i").alias("j")), "j", "left_semi"
-    ).localCheckpoint()
+    p2 = materialize(p.join(states.select(F.col("i").alias("j")), "j", "left_semi"))
     kk = states.agg(F.count(F.lit(1)).cast("long").alias("k"))
-    pi = states.crossJoin(F.broadcast(kk)).select(
+    pi = materialize(states.crossJoin(F.broadcast(kk)).select(
         F.col("i").alias("s"), (F.lit(1.0) / F.col("k")).alias("v")
-    ).localCheckpoint()
+    ))
     for _ in range(_STATIONARY_ROUNDS):
-        raw = (
+        raw = materialize(
             p2.join(pi, p2["i"] == pi["s"])
             .groupBy("j")
             .agg(
@@ -2774,7 +2769,6 @@ def events_markov_stationary(spark: SparkSession, sf_dir: str) -> DataFrame:
             # checkpointing downstream of both re-executed the round's
             # join+aggregate twice per round (r12); pi stays a lazy 1-level
             # projection over this materialized k-row table
-            .localCheckpoint()
         )
         tot = raw.agg(
             F.aggregate(

@@ -40,7 +40,7 @@ from hw_kafka_flink_health_spark.operators.relational import (
     distributed_row_number,
 )
 from hw_kafka_flink_health_spark.queries._registry import register
-from hw_kafka_flink_health_spark.sources.files import load_table
+from hw_kafka_flink_health_spark.sources.files import load_table, materialize
 
 # The worked example needs a (score, label) pair with REAL signal (the
 # synthetic corpus's `lang` column is a label with no textual signal —
@@ -470,7 +470,7 @@ def eval_conformal_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.floor(F.col("o_totalprice") * 100 + 0.5).cast("bigint").alias("cents"),
         (hash_unit(F.col("o_orderkey"), "conf") < 0.5).cast("int").alias("is_cal"),
     )
-    cal_stats = (
+    cal_stats = materialize(
         base.filter(F.col("is_cal") == 1)
         .groupBy("priority")
         .agg(
@@ -481,7 +481,6 @@ def eval_conformal_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
         # branch): Catalyst re-executes unmaterialized subplans per
         # consumer, so without this the orders scan + per-row md5 ran 4x
         # (4 FileScans in the executed plan; 3 after — r12 measurement)
-        .localCheckpoint()
     )
     resid = base.join(F.broadcast(cal_stats), "priority").select(
         "priority",
@@ -489,7 +488,7 @@ def eval_conformal_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_cal",
         F.abs(F.col("n_cal") * F.col("cents") - F.col("s_cal")).alias("r"),
     )
-    q = (
+    q = materialize(
         resid.filter(F.col("is_cal") == 1)
         .groupBy("priority")
         .agg(
@@ -498,7 +497,6 @@ def eval_conformal_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("q_scaled")
         )
         # same rationale: 5 rows, consumed by the test branch's broadcast
-        .localCheckpoint()
     )
     test = resid.filter(F.col("is_cal") == 0).join(F.broadcast(q), "priority")
     return test.groupBy("priority").agg(
@@ -577,13 +575,13 @@ def eval_isotonic_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("label").cast("bigint").alias("pos"),
     )
     wc = Window.orderBy("bin").rowsBetween(Window.unboundedPreceding, 0)
-    pref = bins.select(
+    pref = materialize(bins.select(
         "bin",
         "n",
         "pos",
         F.sum("n").over(wc).cast("bigint").alias("cn"),
         F.sum("pos").over(wc).cast("bigint").alias("cp"),
-    ).localCheckpoint()
+    ))
     i = pref.select(F.col("bin").alias("ib"))
     k = pref.select(
         F.col("bin").alias("kb"),
@@ -1174,12 +1172,11 @@ def eval_krippendorff_alpha(spark: SparkSession, sf_dir: str) -> DataFrame:
     # rater categories a regenerated corpus carries; units beyond 17
     # raters are excluded IDENTICALLY in both engines (documented
     # precondition, not a silent truncation).
-    pair = (
+    pair = materialize(
         o.join(u, "unit")
         .filter((F.col("n_u") >= 2) & (F.col("n_u") <= 17))
-        .localCheckpoint()
     )
-    do_s = pair.agg(
+    do_s = materialize(pair.agg(
         F.sum(
             F.col("o_uc")
             * (F.col("n_u") - F.col("o_uc"))
@@ -1188,7 +1185,7 @@ def eval_krippendorff_alpha(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
         .alias("do_scaled"),
         F.sum("o_uc").cast("long").alias("p_total"),
-    ).localCheckpoint()
+    ))
     tc = pair.groupBy("cat").agg(F.sum("o_uc").cast("long").alias("t_c"))
     de_s = (
         tc.crossJoin(F.broadcast(do_s.select("p_total")))
@@ -1305,7 +1302,7 @@ def eval_clipped_ngram_precision(spark: SparkSession, sf_dir: str) -> DataFrame:
         d.filter(F.col("doc_id") % 2 == 1)
         .select((F.col("doc_id") - 1).alias("pair"), F.col("t").alias("rt"))
     )
-    pairs = cand.join(ref, "pair").localCheckpoint()  # feeds 5 consumers
+    pairs = materialize(cand.join(ref, "pair"))  # feeds 5 consumers
 
     def _bigrams(col: str) -> F.Column:
         t = F.col(col)
@@ -1486,7 +1483,7 @@ def eval_pinball_loss(spark: SparkSession, sf_dir: str) -> DataFrame:
     revenue_yoy_same_month — then a 3-way quantile explode over the
     ~12k-row day table. Nothing after the first aggregate touches raw
     orders."""
-    daily = _daily_revenue(spark, sf_dir).localCheckpoint()  # two join sides
+    daily = materialize(_daily_revenue(spark, sf_dir))  # two join sides
     pred = daily.select(
         "r_name", (F.col("day") + 7).alias("day"), F.col("cents").alias("yhat")
     )

@@ -21,6 +21,7 @@ from hw_kafka_flink_health_spark.operators.mlprep import hash_unit
 from hw_kafka_flink_health_spark.queries._registry import register
 from hw_kafka_flink_health_spark.sources.files import (
     load_table,
+    materialize,
     rebalance_if_narrow,
 )
 
@@ -912,7 +913,7 @@ def experiment_bh_fdr(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     g = F.col("grp")
-    obs = (
+    obs = materialize(  # two consumers: the replicate stream + compare
         base.groupBy("event_type")
         .agg(
             (
@@ -923,7 +924,6 @@ def experiment_bh_fdr(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "p_a"
             ),
         )
-        .localCheckpoint()  # two consumers: the replicate stream + compare
     )
     h = F.md5(
         F.concat(

@@ -24,7 +24,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from hw_kafka_flink_health_spark.queries._registry import register
-from hw_kafka_flink_health_spark.sources.files import load_table
+from hw_kafka_flink_health_spark.sources.files import load_table, materialize
 
 RADIUS_KM = 1500.0
 CELL_DEG = 20.0
@@ -355,7 +355,7 @@ def geo_dbscan_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.floor((F.col("lon") + 180.0) / _DBSCAN_CELL).cast("long").alias("j"),
     ).agg(F.count(F.lit(1)).cast("long").alias("n"))
     tot = cells.agg(F.sum("n").cast("long").alias("nn"))
-    dense = (
+    dense = materialize(
         cells.crossJoin(F.broadcast(tot))
         .filter(
             F.col("n")
@@ -366,10 +366,9 @@ def geo_dbscan_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "i", "j", "n", (F.col("i") * _DBSCAN_COLS + F.col("j")).alias("cid")
         )
-        .localCheckpoint()
     )
     a, b = dense.alias("a"), dense.alias("b")
-    edges = (
+    edges = materialize(
         a.join(
             b,
             (F.abs(F.col("a.i") - F.col("b.i")) <= 1)
@@ -380,7 +379,6 @@ def geo_dbscan_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
             & (F.col("a.cid") != F.col("b.cid")),
         )
         .select(F.col("a.cid").alias("src"), F.col("b.cid").alias("dst"))
-        .localCheckpoint()
     )
     labels = dense.select("cid", F.col("cid").alias("lbl"), "n")
     for _ in range(_DBSCAN_ROUNDS):
@@ -389,7 +387,7 @@ def geo_dbscan_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy(F.col("dst").alias("cid"))
             .agg(F.min("lbl").cast("long").alias("mn"))
         )
-        labels = (
+        labels = materialize(
             labels.join(m, "cid", "left")
             .select(
                 "cid",
@@ -398,7 +396,6 @@ def geo_dbscan_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ),
                 "n",
             )
-            .localCheckpoint()
         )
     return labels.groupBy(F.col("lbl").alias("cluster_id")).agg(
         F.count(F.lit(1)).cast("long").alias("n_cells"),

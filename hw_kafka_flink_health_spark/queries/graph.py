@@ -30,7 +30,7 @@ from pyspark.sql import functions as F
 
 from hw_kafka_flink_health_spark.queries._registry import register
 from hw_kafka_flink_health_spark.session import input_signature, session_cached
-from hw_kafka_flink_health_spark.sources.files import load_table
+from hw_kafka_flink_health_spark.sources.files import load_table, materialize
 
 _SCALE = 1_000_000_000
 _ITERS = 3
@@ -215,11 +215,11 @@ def graph_triangle_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("d1") == F.col("d2")) & (F.col("doc1") < F.col("doc2"))
     )
     # oriented edges feed e1, e2 AND the closing join: materialize once
-    oe = ed.select(
+    oe = materialize(ed.select(
         F.when(lt, F.col("doc1")).otherwise(F.col("doc2")).alias("src"),
         F.when(lt, F.col("doc2")).otherwise(F.col("doc1")).alias("dst"),
         F.when(lt, F.col("d2")).otherwise(F.col("d1")).alias("ddst"),
-    ).localCheckpoint()
+    ))
     e1, e2 = oe.alias("e1"), oe.alias("e2")
     wedge_order = (F.col("e1.ddst") < F.col("e2.ddst")) | (
         (F.col("e1.ddst") == F.col("e2.ddst")) & (F.col("e1.dst") < F.col("e2.dst"))
@@ -303,13 +303,11 @@ def graph_bfs_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     # back to a shuffled anti-join of two reached-set-bounded tables —
     # the edge table is not involved either way (plan-asserted in
     # tests/test_plans.py::test_bfs_edge_table_never_shuffles).
-    dist = spark.createDataFrame(
-        [(_BFS_SOURCE, 0)], "node string, dist int"
-    ).localCheckpoint()
+    dist = materialize(spark.createDataFrame([(_BFS_SOURCE, 0)], "node string, dist int"))
     frontier = dist
     for i in range(_BFS_ROUNDS):
         new = _bfs_round(ed, frontier, dist, i)
-        frontier = new.localCheckpoint()
+        frontier = materialize(new)
         # dist needs no checkpoint of its own: it is a union of already-
         # checkpointed frontiers, so its lineage stays 1 level deep
         dist = dist.unionByName(frontier)
@@ -423,7 +421,7 @@ def graph_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ingest.
 #
 # r13: both tables are checkpointed HASH-PARTITIONED on `src`
-# (`checkpoint_partitioned`) — the in-session analog of the bucketed
+# (`materialize(df, "src")`) — the in-session analog of the bucketed
 # edge layout a production graph store keeps on disk. Every iterative
 # consumer keys its per-round join/aggregate on src, so with the layout
 # preserved the edge table never re-shuffles per round; before, each
@@ -447,8 +445,6 @@ def _orders_lineitem(spark: SparkSession, sf_dir: str, li_col: str, kind: str):
 
 
 def _cs_edges_directed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from hw_kafka_flink_health_spark.sources.files import checkpoint_partitioned
-
     orders, li, key = _orders_lineitem(spark, sf_dir, "l_suppkey", "directed")
     # distinct over the NUMERIC pair before building node strings (the
     # measured ~25% exchange-width win recorded at graph_degree_histogram)
@@ -457,7 +453,7 @@ def _cs_edges_directed(spark: SparkSession, sf_dir: str) -> DataFrame:
         "graph.edges",
         key,
         (orders, li),
-        lambda: checkpoint_partitioned(
+        lambda: materialize(
             orders.join(li, F.col("o_orderkey") == F.col("l_orderkey"))
             .select("o_custkey", "l_suppkey")
             .distinct()
@@ -479,15 +475,13 @@ def _cp_incidence(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate/self-join on p — with the layout pinned, the part-degree
     aggregate, the hub cap semi-join and the within-part pair self-join
     all reuse it exchange-free."""
-    from hw_kafka_flink_health_spark.sources.files import checkpoint_partitioned
-
     orders, li, key = _orders_lineitem(spark, sf_dir, "l_partkey", "cp")
     return session_cached(
         spark,
         "graph.edges",
         key,
         (orders, li),
-        lambda: checkpoint_partitioned(
+        lambda: materialize(
             orders.join(li, F.col("o_orderkey") == F.col("l_orderkey"))
             .select(F.col("o_custkey").alias("c"), F.col("l_partkey").alias("p"))
             .distinct(),
@@ -506,15 +500,13 @@ def _cs_edges_undirected(spark: SparkSession, sf_dir: str) -> DataFrame:
     directed copies of a distinct set are already globally distinct.
     The cached entry holds the directed table it was built from, so a
     rebuilt directed table never matches it."""
-    from hw_kafka_flink_health_spark.sources.files import checkpoint_partitioned
-
     e0 = _cs_edges_directed(spark, sf_dir)
     return session_cached(
         spark,
         "graph.edges",
         ("undirected", sf_dir),
         (e0,),
-        lambda: checkpoint_partitioned(
+        lambda: materialize(
             e0.unionByName(
                 e0.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
             ),
@@ -602,7 +594,7 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
         # every round's survivors feed BOTH next-round consumers (degree
         # agg + semi probes) — checkpoint; the LAST round has exactly one
         # consumer (the final degree agg), so its materialization would
-        # be pure waste. NOT checkpoint_partitioned (measured r13): the
+        # be pure waste. NOT materialize(edges, "src") (measured r13): the
         # AQE-off materialization that pins the layout also plans the
         # round's OWN semi-joins statically — the keep side (unknown
         # estimate behind the previous checkpoint) then sort-merge-joins
@@ -611,7 +603,7 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
         # is the cheaper evil at every scale where the keep set
         # broadcasts.
         if rnd < _KCORE_ROUNDS - 1:
-            edges = edges.localCheckpoint()
+            edges = materialize(edges)
     return edges.groupBy(F.col("src").alias("node")).agg(
         F.count(F.lit(1)).cast("long").alias("core_degree")
     )
@@ -728,11 +720,10 @@ def graph_hits_bipartite(spark: SparkSession, sf_dir: str) -> DataFrame:
     TakeOrderedAndProject, never a full sort."""
     orders = load_table(spark, sf_dir, "orders")
     li = load_table(spark, sf_dir, "lineitem")
-    edges = (
+    edges = materialize(
         orders.join(li, F.col("o_orderkey") == F.col("l_orderkey"))
         .select(F.col("o_custkey").alias("c"), F.col("l_suppkey").alias("s"))
         .distinct()
-        .localCheckpoint()
     )
     a1 = edges.groupBy("s").agg(F.count(F.lit(1)).cast("long").alias("a1"))
     h1 = (
@@ -850,7 +841,7 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
         # but the lineage compounds a join+2 aggs per round — checkpoint
         # keeps the plan (and any retry) bounded, as in BFS/k-core.
         if rnd < _LPA_ROUNDS - 1:
-            labels = labels.localCheckpoint()
+            labels = materialize(labels)
     return (
         labels.groupBy(F.col("lab").alias("community"))
         .agg(F.count(F.lit(1)).cast("long").alias("n_nodes"))
@@ -905,7 +896,7 @@ def graph_jaccard_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("dp").between(2, 25))
         .select("p")
     )
-    cpk = cp.join(dk, "p", "left_semi").localCheckpoint()  # feeds 3 consumers
+    cpk = materialize(cp.join(dk, "p", "left_semi"))  # feeds 3 consumers
     deg = cpk.groupBy("c").agg(F.count(F.lit(1)).cast("long").alias("d"))
     a = cpk.select(F.col("p").alias("p1"), F.col("c").alias("c1"))
     b = cpk.select(F.col("p").alias("p2"), F.col("c").alias("c2"))
@@ -994,9 +985,9 @@ def graph_harmonic_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
     seed absent from the corpus contributes its dist-0 self row and
     zero counts, identically in both engines."""
     ed = _cs_edges_undirected(spark, sf_dir)
-    dist = spark.createDataFrame(
+    dist = materialize(spark.createDataFrame(
         [(s, s, 0) for s in _HC_SEEDS], "seed string, node string, dist int"
-    ).localCheckpoint()
+    ))
     frontier = dist
     for i in range(_HC_ROUNDS):
         cand = (
@@ -1013,7 +1004,7 @@ def graph_harmonic_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .select("seed", F.col("n2").alias("node"), F.col("d2").alias("dist"))
         )
-        frontier = new.localCheckpoint()
+        frontier = materialize(new)
         dist = dist.unionByName(frontier)
     return dist.groupBy("seed").agg(
         F.count(F.when(F.col("dist") == 1, 1)).cast("long").alias("n_d1"),
@@ -1100,7 +1091,7 @@ def graph_personalized_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     one map-side-combined sum; top-20 plans as TakeOrderedAndProject."""
     ed = _cs_edges_undirected(spark, sf_dir)
     nodes = ed.select(F.col("src").alias("node")).distinct()
-    outdeg = ed.groupBy("src").agg(F.count(F.lit(1)).alias("d")).localCheckpoint()
+    outdeg = materialize(ed.groupBy("src").agg(F.count(F.lit(1)).alias("d")))
     seeds = (
         nodes.filter(F.col("node").startswith("c"))
         .orderBy(F.md5(F.col("node")).asc(), F.col("node").asc())
@@ -1109,7 +1100,7 @@ def graph_personalized_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # node -> is_seed map, reused by every round's teleport term (and as
     # the node universe): checkpoint once, 4 consumers
-    base = nodes.join(F.broadcast(seeds), "node", "left").localCheckpoint()
+    base = materialize(nodes.join(F.broadcast(seeds), "node", "left"))
     tele = F.when(
         F.col("_seed").isNotNull(),
         F.lit((_SCALE * 15 // 100) // _PPR_SEEDS),

@@ -36,7 +36,7 @@ from hw_kafka_flink_health_spark.operators.relational import (
     global_prefix_sums,
 )
 from hw_kafka_flink_health_spark.queries._registry import register
-from hw_kafka_flink_health_spark.sources.files import load_table
+from hw_kafka_flink_health_spark.sources.files import load_table, materialize
 
 _URGENT = "1-URGENT"
 _LOW = "5-LOW"
@@ -383,9 +383,9 @@ def stats_ks_two_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Checkpoint the scan OUTPUT (its internal checkpoint sits below
     # the Arrow pass): tot and the argmax pass are two consumers that
     # would otherwise each replay the mapInPandas scan (review r12).
-    cumsums = global_prefix_sums(
-        byval, ["ca", "cb"], ["v"], out_cols=["ca_cum", "cb_cum"]
-    ).localCheckpoint()
+    cumsums = materialize(
+        global_prefix_sums(byval, ["ca", "cb"], ["v"], out_cols=["ca_cum", "cb_cum"])
+    )
     # Totals = max of the monotone nonneg cumsums — no second table scan.
     tot = cumsums.agg(
         F.max("ca_cum").cast("long").alias("n_a"),
@@ -866,14 +866,13 @@ def stats_kruskal_wallis(spark: SparkSession, sf_dir: str) -> DataFrame:
     doubles is the hazard, not the fix). try_divide/nullif mirror the
     degenerate all-tied (tie ratio = 1) and N<=1 corpora as NULL."""
     orders = load_table(spark, sf_dir, "orders")
-    gv = (
+    gv = materialize(  # two consumers: byval and the rank join-back
         orders.filter(F.col("o_totalprice").isNotNull())
         .groupBy(
             F.col("o_totalprice").alias("v"),
             F.col("o_orderpriority").alias("priority"),
         )
         .agg(F.count(F.lit(1)).cast("long").alias("cg"))
-        .localCheckpoint()  # two consumers: byval and the rank join-back
     )
     byval = gv.groupBy("v").agg(F.sum("cg").cast("long").alias("c"))
     # Doubled-rank cumulative via global_prefix_sum (range shuffle +
@@ -884,13 +883,12 @@ def stats_kruskal_wallis(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The scan's internal checkpoint sits BELOW its Arrow pass, so the
     # OUTPUT is checkpointed too: tot and the per-group join would
     # otherwise each replay the mapInPandas scan (review r12).
-    ranked = (
+    ranked = materialize(
         global_prefix_sum(byval, "c", ["v"], out_col="_c_cum")
         .withColumn(
             "avgrank2",
             2 * (F.col("_c_cum") - F.col("c")) + F.col("c") + 1,
         )
-        .localCheckpoint()
     )
     tot = ranked.agg(
         F.sum("c").cast("long").alias("n_tot"),

@@ -31,7 +31,7 @@ from hw_kafka_flink_health_spark.queries._shared import (
     DAILY_REV_SQL as _DAILY_REV_SQL,
     daily_regional_revenue,
 )
-from hw_kafka_flink_health_spark.sources.files import load_table
+from hw_kafka_flink_health_spark.sources.files import load_table, materialize
 
 # Weekdays in [0, d) for an epoch-day count d (1970-01-01 = Thursday):
 # 5 per full week plus a 7-way lookup for the remainder starting Thursday.
@@ -937,12 +937,11 @@ def finance_var_historical(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast back), one tail reduction — raw orders touched once."""
     daily = daily_regional_revenue(spark, sf_dir)
     wlag = Window.partitionBy("r_name").orderBy("day")
-    dd = (
+    dd = materialize(  # two consumers: the VaR agg + the tail scan
         daily.select(
             "r_name", (F.col("cents") - F.lag("cents").over(wlag)).alias("d")
         )
         .filter(F.col("d").isNotNull())
-        .localCheckpoint()  # two consumers: the VaR agg + the tail scan
     )
     var = dd.groupBy("r_name").agg(
         F.expr("percentile_disc(0.05) WITHIN GROUP (ORDER BY d)")
@@ -1261,12 +1260,12 @@ def inventory_abc_xyz_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     # part-grain table has TWO consumers (the distributed rank and the
     # grand-total aggregate): unmaterialized, each re-ran the lineitem
     # scan + both aggregates (2 FileScans in the executed plan — r12)
-    parts = monthly.groupBy("l_partkey").agg(
+    parts = materialize(monthly.groupBy("l_partkey").agg(
         F.count(F.lit(1)).cast("long").alias("m"),
         F.sum("qty").cast("long").alias("s"),
         F.sum(dec(F.col("qty")) * F.col("qty")).alias("ss"),
         F.sum("cents").cast("long").alias("spend"),
-    ).localCheckpoint()
+    ))
     ranked = global_prefix_sum(
         parts,
         "spend",

@@ -23,7 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from hw_kafka_flink_health_spark.queries._registry import register
-from hw_kafka_flink_health_spark.sources.files import load_table
+from hw_kafka_flink_health_spark.sources.files import load_table, materialize
 
 
 def _ensure_recursion_headroom(spark: SparkSession, levels: int = 400) -> None:
@@ -237,11 +237,11 @@ def recursive_holt_linear_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     months = orders.groupBy(
         F.date_trunc("month", F.col("o_orderdate")).alias("m")
     ).agg(F.sum(F.floor(F.col("o_totalprice") * 100 + 0.5).cast("bigint")).alias("c"))
-    idx = months.select(
+    idx = materialize(months.select(
         "m",
         (F.col("c") / F.lit(100.0).cast("double")).alias("y"),
         F.row_number().over(W.orderBy("m")).cast("bigint").alias("i"),
-    ).localCheckpoint()
+    ))
     return _sql_over_views(
         spark, "WITH RECURSIVE " + _HOLT_STEP_SQL.format(idx="{idx}"), {"idx": idx}
     )
@@ -348,16 +348,16 @@ def recursive_holt_winters_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.date_trunc("day", "o_orderdate").alias("d"))
         .agg(F.sum(F.floor(F.col("o_totalprice") * 100 + 0.5).cast("bigint")).alias("c"))
     )
-    idx = daily.select(
+    idx = materialize(daily.select(
         F.row_number().over(W.orderBy("d")).cast("bigint").alias("i"),
         F.unix_millis(F.col("d").cast("timestamp")).alias("d_ms"),
         "c",
         (F.col("c") / F.lit(100.0)).alias("y"),
-    ).localCheckpoint()
+    ))
     w7 = idx.filter(F.col("i") <= 7).select(
         "i", "c", F.sum("c").over(W.partitionBy()).cast("bigint").alias("sc")
     )
-    anchor = w7.groupBy().agg(
+    anchor = materialize(w7.groupBy().agg(
         F.max("sc").alias("msc"),
         F.array_sort(F.collect_list(F.struct("i", "c", "sc"))).alias("cl"),
     ).select(
@@ -373,7 +373,7 @@ def recursive_holt_winters_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
             lambda s: s.getField("c") / F.lit(100.0)
             - s.getField("sc") / F.lit(700.0),
         ).alias("ss"),
-    ).localCheckpoint()
+    ))
     lvl_s, trd_s, snew_s = _hw_step("element_at(h.ss, 1)")
     return _sql_over_views(
         spark,
@@ -496,7 +496,7 @@ def timeseries_dtw_band(spark: SparkSession, sf_dir: str) -> DataFrame:
     dly = base.groupBy("d").agg(
         F.sum("ca").cast("long").alias("ca"), F.sum("cb").cast("long").alias("cb")
     )
-    arrs = dly.agg(
+    arrs = materialize(dly.agg(
         F.map_from_entries(F.collect_list(F.struct("d", "ca"))).alias("m_a"),
         F.map_from_entries(F.collect_list(F.struct("d", "cb"))).alias("m_b"),
     ).select(
@@ -508,7 +508,7 @@ def timeseries_dtw_band(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"transform(sequence(CAST(0 AS BIGINT), {N - 1}), dd -> "
             f"CAST(coalesce(try_element_at(m_b, dd), 0) AS BIGINT))"
         ).alias("b"),
-    ).localCheckpoint()
+    ))
     return _sql_over_views(
         spark,
         f"""
@@ -619,7 +619,7 @@ def timeseries_croston(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.sum(F.col("l_quantity").cast("long")).cast("long").alias("d"))
     )
     w = W.orderBy("d_day")
-    idx = demand.select(
+    idx = materialize(demand.select(
         F.row_number().over(w).cast("bigint").alias("i"),
         F.unix_millis(F.col("d_day").cast("timestamp")).alias("d_ms"),
         "d",
@@ -631,7 +631,7 @@ def timeseries_croston(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .cast("bigint")
         .alias("q"),
-    ).localCheckpoint()
+    ))
     return _sql_over_views(
         spark,
         "WITH RECURSIVE " + _CROSTON_STEP_SQL.format(idx="{idx}"),

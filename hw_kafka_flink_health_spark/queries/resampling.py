@@ -27,7 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from hw_kafka_flink_health_spark.queries._registry import register
-from hw_kafka_flink_health_spark.sources.files import load_table, rebalance_if_narrow
+from hw_kafka_flink_health_spark.sources.files import load_table, materialize, rebalance_if_narrow
 
 _B_BOOT = 100
 _B_PERM = 200
@@ -177,10 +177,9 @@ def stats_poisson_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     # rep is B+1 tiny rows with two consumers (replicate means + the
     # pseudo-replicate point estimate); localCheckpoint pins the single
     # scan — otherwise each consumer re-plans the explode+aggregate
-    rep = (
+    rep = materialize(
         exploded.groupBy("b")
         .agg(F.sum(F.col("w") * F.col("c")).alias("wc"), F.sum("w").alias("wn"))
-        .localCheckpoint()
     )
     means = rep.filter((F.col("b") >= 0) & (F.col("wn") > 0)).select(
         (F.col("wc") / (100.0 * F.col("wn"))).alias("m")
@@ -294,14 +293,14 @@ def stats_permutation_diff_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     # obs_d + n_rows into the final compare); localCheckpoint pins its
     # scan+aggregate to run once — the query then scans orders exactly
     # twice (observed stats, replicate stream), never four times
-    obs = base.agg(
+    obs = materialize(base.agg(
         (
             F.try_divide(F.sum(F.col("c") * g), 100.0 * F.sum(g))
             - F.try_divide(F.sum(F.col("c") * (1 - g)), 100.0 * F.sum(1 - g))
         ).alias("d"),
         F.try_divide(F.sum(g), F.count(F.lit(1)).cast("double")).alias("p_a"),
         F.count(F.lit(1)).cast("bigint").alias("n_rows"),
-    ).localCheckpoint()
+    ))
     exploded = (
         base.select(
             "o_orderkey",

@@ -22,7 +22,7 @@ from pyspark.sql import functions as F
 
 from hw_kafka_flink_health_spark.operators.similarity import cosine_topk
 from hw_kafka_flink_health_spark.queries._registry import register
-from hw_kafka_flink_health_spark.sources.files import load_table
+from hw_kafka_flink_health_spark.sources.files import load_table, materialize
 
 QUERY_TERMS = ["spark", "window", "hash", "merge", "stream"]
 _K1 = 1.2
@@ -329,10 +329,9 @@ def retrieval_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # actions (the rels collect and the pairwise-sims pass built from
     # its ids) — unmaterialized, each would re-run the corpus-sized
     # cosine ranking (review r11)
-    cand = (
+    cand = materialize(
         cosine_topk(emb, emb.filter(F.col("vec_id") == 0), k=_MMR_K_CAND)
         .select(F.col("neighbor_id").alias("vec_id"), F.round("cosine", 6).alias("rel"))
-        .localCheckpoint()
     )
     ids = cand.select("vec_id")
     vecs = emb.join(F.broadcast(ids), "vec_id").select("vec_id", "embedding")

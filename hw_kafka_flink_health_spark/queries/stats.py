@@ -16,7 +16,7 @@ from hw_kafka_flink_health_spark.operators.frequency import heavy_hitters
 from hw_kafka_flink_health_spark.operators.mlprep import hash_unit
 from hw_kafka_flink_health_spark.operators.relational import distributed_ntile
 from hw_kafka_flink_health_spark.queries._registry import register
-from hw_kafka_flink_health_spark.sources.files import load_table
+from hw_kafka_flink_health_spark.sources.files import load_table, materialize
 
 
 @register(
@@ -646,10 +646,9 @@ def approx_topk_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = docs.select(F.explode(F.split(F.col("text"), " ")).alias("tok")).filter(
         F.col("tok") != ""
     )
-    counts = (
+    counts = materialize(
         toks.groupBy("tok")
         .agg(F.count(F.lit(1)).cast("long").alias("c"))
-        .localCheckpoint()
     )
     sketch = cms_build(counts, "tok", depth=4, width=1024, hash="md5", weight="c")
     MIN_FREQ = 64
@@ -2819,9 +2818,7 @@ def quantile_exact_disc_totalprice(
     # Checkpoint the scan OUTPUT — tot and the threshold picks are two
     # consumers that would otherwise each replay the Arrow pass (the
     # scan's internal checkpoint sits below it, review r12).
-    cums = global_prefix_scan(
-        byval, ["c"], ["v"], out_cols=["cum"]
-    ).localCheckpoint()
+    cums = materialize(global_prefix_scan(byval, ["c"], ["v"], out_cols=["cum"]))
     # N = max of the monotone cumulative; coalesce(0) keeps the
     # all-NULL fixture on the oracle's one-row count(*)=0 shape.
     tot = cums.agg(

@@ -33,7 +33,7 @@ from hw_kafka_flink_health_spark.operators.multimodal import (
     synthesize_codec_assets,
 )
 from hw_kafka_flink_health_spark.queries._registry import register
-from hw_kafka_flink_health_spark.sources.files import load_table
+from hw_kafka_flink_health_spark.sources.files import load_table, materialize
 
 
 @register(
@@ -1014,7 +1014,7 @@ def pipeline_pretrain_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
         W.partitionBy(fingerprint_expr("text")).orderBy("doc_id")
     )
     raw_toks = F.split(F.col("text"), " ")
-    qual = (
+    qual = materialize(
         docs.withColumn("rn", rn)
         .filter((F.col("rn") == 1) & ~is_bench)
         .filter(
@@ -1033,7 +1033,6 @@ def pipeline_pretrain_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
         # Materializing one survivor body is strictly fewer bytes than
         # re-shuffling it twice more — the §8 "move heavy rows once"
         # rule applied to a checkpoint instead of a join.
-        .localCheckpoint()
     )
 
     # stage 3: drop anything sharing a 5-gram with the eval set
@@ -2200,10 +2199,7 @@ def text_cross_doc_dup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     from hw_kafka_flink_health_spark.operators.dedup import shingle_table
 
     docs = load_table(spark, sf_dir, "documents")
-    sh = (
-        shingle_table(docs, "text", "doc_id", 5, nonempty=True)
-        .localCheckpoint()
-    )
+    sh = materialize(shingle_table(docs, "text", "doc_id", 5, nonempty=True))
     per_doc = sh.select(
         F.col("doc").alias("doc_id"), F.size("sh").cast("long").alias("n_grams")
     )
@@ -2485,11 +2481,10 @@ def text_rake_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     # join) read the token table, and Catalyst does not share
     # unmaterialized subplans — without it the explode+window pipeline
     # runs three times (the r4 BM25 lesson)
-    grouped = (
+    grouped = materialize(
         words.withColumn("grp", F.sum("is_stop").over(wdoc))
         .filter(F.col("is_stop") == 0)
         .select("doc_id", "pos", "w", "grp")
-        .localCheckpoint()
     )
     phr = (
         grouped.groupBy("doc_id", "grp")
@@ -3530,7 +3525,7 @@ def multimodal_aspect_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents")
     st = decode_codec_stats(synthesize_codec_assets(docs))
-    img = (
+    img = materialize(  # decode runs ONCE; feeds bucket agg + waste sum
         st.filter(F.col("modality") == "image")
         .select(
             "asset_id",
@@ -3538,7 +3533,6 @@ def multimodal_aspect_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("height").cast("long").alias("h"),
         )
         .withColumn("ar_milli", F.expr("w * 1000 DIV h"))
-        .localCheckpoint()  # decode runs ONCE; feeds bucket agg + waste sum
     )
     b = img.groupBy("ar_milli").agg(
         F.count(F.lit(1)).cast("long").alias("n_images"),
@@ -3686,7 +3680,7 @@ def multimodal_image_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = load_table(spark, sf_dir, "documents")
-    ph = phash_codec_images(synthesize_codec_assets(docs)).localCheckpoint()
+    ph = materialize(phash_codec_images(synthesize_codec_assets(docs)))
     dup = ph.groupBy("phash").agg(
         F.count(F.lit(1)).cast("long").alias("n_same_hash")
     )

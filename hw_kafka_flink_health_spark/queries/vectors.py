@@ -16,7 +16,7 @@ from hw_kafka_flink_health_spark.operators.similarity import (
     srp_ann_topk,
 )
 from hw_kafka_flink_health_spark.queries._registry import register
-from hw_kafka_flink_health_spark.sources.files import load_table
+from hw_kafka_flink_health_spark.sources.files import load_table, materialize
 
 _COS = (
     "list_inner_product(e.embedding::DOUBLE[], q.qe) / "
@@ -973,7 +973,7 @@ def embedding_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("d", "e")
         .agg(F.sum(F.col("va") * F.col("vb")).cast("long").alias("c"))
     )
-    cm = cm.localCheckpoint()  # consumed by v1 (twice) and v2
+    cm = materialize(cm)  # consumed by v1 (twice) and v2
     v1 = cm.filter(F.col("e") == 1).select(F.col("d").alias("e"), F.col("c").alias("x"))
     v2 = (
         cm.join(F.broadcast(v1), "e")
@@ -1034,10 +1034,9 @@ def embedding_mutual_nn(spark: SparkSession, sf_dir: str) -> DataFrame:
     pool = emb.filter(F.col("vec_id") < 400)
     # the reciprocity self-join consumes the NN table twice — without
     # materialization Catalyst re-runs the whole top-1 search per side
-    nn = (
+    nn = materialize(
         cosine_topk_arrow(pool, pool, k=1)
         .select("query_id", "neighbor_id", "cosine")
-        .localCheckpoint()
     )
     a, b = nn.alias("a"), nn.alias("b")
     return (
@@ -1371,7 +1370,7 @@ def embedding_matryoshka_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     top = tops[0]
     for t in tops[1:]:
         top = top.unionByName(t)
-    top = top.localCheckpoint()
+    top = materialize(top)
     full = top.filter(F.col("dims") == 64).select("query_id", "neighbor_id")
     return (
         top.filter(F.col("dims") != 64)

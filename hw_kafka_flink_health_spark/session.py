@@ -11,11 +11,13 @@ partition count is a default for local runs and is expected to be overridden
 (or left to AQE) on a real cluster.
 
 `session_cached` is the engine's one cache of intermediate results
-(edge and near-dup pair tables, cluster maps, scan partition probes).
+(edge and near-dup pair tables, cluster maps, scan partition probes);
+`conf_override` is its one way to flip a session conf for a moment.
 """
 
 from __future__ import annotations
 
+import contextlib
 import os
 import threading
 from collections import OrderedDict
@@ -194,6 +196,32 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+# Re-entrant: a flip may run inside another on the same thread (the
+# window sweep renders a plan under maxToStringFields from inside
+# materialize's AQE flip).
+_CONF_LOCK = threading.RLock()
+
+
+@contextlib.contextmanager
+def conf_override(spark: SparkSession, key: str, value: str):
+    """Set session conf `key` to `value` for the body of the `with`, then
+    restore it, unsetting a key that was unset. Session confs are global
+    to every thread of the session, so flips hold one lock: two
+    interleaved read-set-restore sequences would leave one thread's
+    temporary value behind for good."""
+    with _CONF_LOCK:
+        # a None default reads an unset conf as None (see rebalance_if_narrow)
+        old = spark.conf.get(key, None)
+        spark.conf.set(key, value)
+        try:
+            yield
+        finally:
+            if old is None:
+                spark.conf.unset(key)
+            else:
+                spark.conf.set(key, old)
 
 
 # (id(spark), label, *key) -> (input frames, value), least recently used

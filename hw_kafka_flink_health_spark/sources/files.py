@@ -13,18 +13,22 @@ Scale notes:
   (with ``spark.sql.legacy.parquet.nanosAsLong``) as a long, so the loader
   converts to a microsecond TIMESTAMP_NTZ here, once, at the source —
   downstream operators always see a real timestamp column.
+
+``materialize`` is the engine's one way to materialise a frame (the
+only ``localCheckpoint`` call in the package), optionally hash-
+partitioned on key columns.
 """
 
 from __future__ import annotations
 
+import contextlib
 import os
-import threading
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from hw_kafka_flink_health_spark.schemas import STAR_TABLES
-from hw_kafka_flink_health_spark.session import input_signature, session_cached
+from hw_kafka_flink_health_spark.session import conf_override, input_signature, session_cached
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -66,9 +70,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 # no frame. The cap keeps a long-lived session bounded: every
 # versioned-table write changes the file set (round-7 verdict #6).
 _PROBE_CAP = 256
-
-# serializes checkpoint_partitioned's session-global AQE flip
-_AQE_FLIP_LOCK = threading.Lock()
 
 
 def rebalance_if_narrow(df: DataFrame) -> DataFrame:
@@ -113,15 +114,18 @@ def rebalance_if_narrow(df: DataFrame) -> DataFrame:
     return df.repartition(target)
 
 
-def checkpoint_partitioned(df: DataFrame, *cols: str) -> DataFrame:
-    """localCheckpoint `df` hash-partitioned on `cols`, with
-    the partitioning PRESERVED in the checkpointed frame's plan — the
-    in-session analog of writing a bucketed+sorted table (guide §2.4):
-    every downstream join or aggregate keyed on `cols` reuses the layout
-    instead of re-shuffling the table, which is the whole per-round edge
-    shuffle of an iterative graph query.
+def materialize(df: DataFrame, *keys: str) -> DataFrame:
+    """Materialise `df` once: an eager `localCheckpoint`, so every
+    consumer reads the stored rows instead of re-running the plan
+    (Catalyst does not share an unmaterialized subtree between
+    consumers) and an iterative loop's lineage stays one level deep.
 
-    Two Spark mechanics make the function non-obvious:
+    With `keys`, the rows are stored hash-partitioned on them and the
+    partitioning is PRESERVED in the result's plan — the in-session
+    analog of writing a bucketed table (guide §2.4): every downstream
+    join or aggregate keyed on `keys` reuses the layout instead of
+    re-shuffling the table, which is the whole per-round edge shuffle
+    of an iterative graph query. Two Spark mechanics shape this:
 
     * `Dataset.localCheckpoint` only carries `outputPartitioning` /
       `outputOrdering` into the resulting `LogicalRDD` when the physical
@@ -131,31 +135,43 @@ def checkpoint_partitioned(df: DataFrame, *cols: str) -> DataFrame:
       `UnknownPartitioning` (measured: the r13 LPA join re-shuffled 1.17M
       cached edge rows per round, then AQE broadcast the 15 MB edge side
       and coalesced the node-sized probe to ONE task). AQE is therefore
-      disabled around this one action and restored after, under
-      `_AQE_FLIP_LOCK` so concurrent builds cannot interleave the flip.
+      off for this one action (`conf_override`).
     * The partition count is pinned to `spark.sql.shuffle.partitions` so
       EnsureRequirements recognizes the table as co-partitioned with any
       join side it plans at the session default — a mismatched count
-      would re-shuffle the pre-partitioned side.
+      would re-shuffle the pre-partitioned side. No constant is written
+      anywhere: the layout follows the session's shuffle parallelism,
+      like the ingest-time bucketing a large graph pipeline runs once
+      before its iterative phase.
 
-    Scale note: this writes no constant anywhere — the layout follows the
-    session's shuffle parallelism, exactly like the ingest-time bucketing
-    a 100 TB graph pipeline runs once before its iterative phase.
+    Deployment caveat: the stored blocks are executor-local and not
+    replicated. On a local master (this engine's driver contract) they
+    live as long as the session. On a multi-executor deployment with
+    dynamic allocation, losing an executor makes every later read of a
+    materialised frame — including session-cache hits
+    (`session_cached`) — fail on missing blocks instead of recomputing.
+    Switch this function to a reliable `checkpoint()` before running
+    off local mode.
     """
-    spark = df.sparkSession
-    n = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    # no sortWithinPartitions: the ordering would only help a same-key
-    # SMJ skip its sort, and these joins either broadcast the small side
-    # (local scale) or sort node-sized tables, not this one; the sort
-    # measured +0.3 s per build for no downstream change (r13)
-    staged = df.repartition(n, *cols)
-    with _AQE_FLIP_LOCK:
-        old = spark.conf.get("spark.sql.adaptive.enabled")
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-        try:
-            return staged.localCheckpoint()
-        finally:
-            spark.conf.set("spark.sql.adaptive.enabled", old)
+    flip = contextlib.nullcontext()
+    if keys:
+        spark = df.sparkSession
+        n = int(spark.conf.get("spark.sql.shuffle.partitions"))
+        # no sortWithinPartitions: the ordering would only help a same-key
+        # SMJ skip its sort, and these joins either broadcast the small side
+        # (local scale) or sort node-sized tables, not this one; the sort
+        # measured +0.3 s per build for no downstream change (r13)
+        df = df.repartition(n, *keys)
+        flip = conf_override(spark, "spark.sql.adaptive.enabled", "false")
+    with flip:
+        return df.localCheckpoint()
+
+
+# `perfbench/tracer.py` wraps `files.checkpoint_partitioned` by name for
+# its `sources.checkpoint_partitioned` layer counter, and the benchmark
+# harness stays fixed so runs before and after an engine change compare.
+# Through this alias the counter counts every `materialize` call.
+checkpoint_partitioned = materialize
 
 
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

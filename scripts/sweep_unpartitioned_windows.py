@@ -3,12 +3,14 @@ INCLUDING subtrees later hidden by a localCheckpoint (VERDICT r10 #3 — the
 round-10 per-query plan gate inspected executed plans, which a checkpoint
 truncates; text_heaps_vocab_growth's doc-cardinality window hid that way).
 
-Mechanism: plans.capture_checkpoints patches localCheckpoint on the
-CONCRETE DataFrame class (Spark 4's classic.DataFrame defines its own —
-patching only the pyspark.sql base was a silent no-op, the r11 hole) to
-capture each input's UNTRUNCATED analyzed plan before delegating, build
-each query at sf0.001, then parse every windowspecdefinition for an
-empty partition spec.
+Mechanism: plans.capture_checkpoints patches
+pyspark.sql.classic.dataframe.DataFrame.localCheckpoint (the concrete
+class, which overrides the pyspark.sql base — patching the base was a
+silent no-op, the r11 hole), which every engine materialisation reaches
+through sources.files.materialize. The patch captures each input's
+UNTRUNCATED analyzed plan before delegating; the script builds each
+query at sf0.001, then parses every windowspecdefinition for an empty
+partition spec.
 
 Usage: python scripts/sweep_unpartitioned_windows.py [name_filter]
 Prints one line per (query, window) hit: the window's spec args.

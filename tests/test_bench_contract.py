@@ -64,6 +64,9 @@ def test_bench_emits_single_json_line(tmp_path):
     fp = doc["fingerprint"]
     assert fp["cpu_score_mib_s"] > 0
     assert fp.get("python") and fp.get("spark")
+    # box CPUs and the cores Spark schedules on are recorded separately
+    assert doc["n_cpus"] == os.cpu_count()
+    assert doc["spark_cores"] == 8
 
 
 # test_all_query_columns_are_aliased_stable_names moved to

@@ -1086,6 +1086,41 @@ def test_session_cache_is_the_only_cache_store():
     assert not offenders, offenders
 
 
+def test_materialize_is_the_only_checkpoint_call():
+    """One way to materialise a frame: the package calls
+    `.localCheckpoint(...)` exactly once, inside
+    `sources.files.materialize` — new materialisations go through it."""
+    import ast
+    import pathlib
+
+    import hw_kafka_flink_health_spark as pkg
+
+    def checkpoint_calls(tree):
+        return [
+            n.lineno
+            for n in ast.walk(tree)
+            if isinstance(n, ast.Call)
+            and isinstance(n.func, ast.Attribute)
+            and n.func.attr == "localCheckpoint"
+        ]
+
+    root = pathlib.Path(pkg.__file__).parent
+    inside, offenders = [], []
+    for path in sorted(root.rglob("*.py")):
+        tree = ast.parse(path.read_text())
+        allowed = set()
+        if path == root / "sources" / "files.py":
+            for node in tree.body:
+                if isinstance(node, ast.FunctionDef) and node.name == "materialize":
+                    inside = checkpoint_calls(node)
+                    allowed = set(inside)
+        offenders += [
+            f"{path.relative_to(root)}:{ln}" for ln in checkpoint_calls(tree) if ln not in allowed
+        ]
+    assert not offenders, offenders
+    assert len(inside) == 1, inside
+
+
 def test_no_single_partition_window_over_fact_cardinality(spark):
     """Round-10 gate: the five queries that used to plan a global
     `Window.orderBy(...)` over fact/user/doc-cardinality input (an

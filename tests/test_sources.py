@@ -406,14 +406,14 @@ def test_ignore_corrupt_files_skips_bad_parquet(spark, tmp_path):
 
 
 def test_checkpoint_partitioned_aqe_flip_is_safe_under_concurrency(spark):
-    """checkpoint_partitioned turns AQE off around its checkpoint and
+    """materialize(df, *keys) turns AQE off around its checkpoint and
     restores it. Concurrent callers must not interleave the read-set-
     restore (one reading another's 'false' as the value to restore),
     which would leave AQE off for the rest of the session."""
     import sys
     from concurrent.futures import ThreadPoolExecutor
 
-    from hw_kafka_flink_health_spark.sources.files import checkpoint_partitioned
+    from hw_kafka_flink_health_spark.sources.files import materialize
 
     start = spark.conf.get("spark.sql.adaptive.enabled")
     df = spark.range(200).select((F.col("id") % 7).alias("k"), "id")
@@ -422,7 +422,7 @@ def test_checkpoint_partitioned_aqe_flip_is_safe_under_concurrency(spark):
     try:
         with ThreadPoolExecutor(2 * (os.cpu_count() or 4)) as pool:
             futures = [
-                pool.submit(lambda: checkpoint_partitioned(df, "k").count())
+                pool.submit(lambda: materialize(df, "k").count())
                 for _ in range(16)
             ]
             counts = [f.result(timeout=300) for f in futures]

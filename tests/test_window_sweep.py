@@ -152,6 +152,48 @@ def test_unpartitioned_spec_parser_self_check(spark):
     assert unpartitioned_specs(analyzed_str(wide))
 
 
+def test_analyzed_str_restores_max_to_string_fields_under_concurrency(spark):
+    """analyzed_str raises maxToStringFields around its render and puts
+    back the prior state (a value, or unset). Concurrent renders must not
+    interleave the read-set-restore: one thread reading another's raised
+    cap as the value to restore leaves plan strings untruncated for the
+    rest of the session."""
+    import sys
+    import threading
+    from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark.sql import functions as F
+
+    key = "spark.sql.debug.maxToStringFields"
+    start = spark.conf.get(key, None)
+    wide = spark.range(10).select(*[(F.col("id") + i).alias(f"c{i}") for i in range(40)])
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        for prior in ("30", None):
+            if prior is None:
+                spark.conf.unset(key)
+            else:
+                spark.conf.set(key, prior)
+            gate = threading.Barrier(16)
+
+            def render():
+                gate.wait(timeout=60)
+                return analyzed_str(wide)
+
+            with ThreadPoolExecutor(16) as pool:
+                futures = [pool.submit(render) for _ in range(16)]
+                for f in futures:
+                    f.result(timeout=300)
+            assert spark.conf.get(key, None) == prior
+    finally:
+        sys.setswitchinterval(interval)
+        if start is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, start)
+
+
 def _moved_note():
     """test_no_unaudited_unpartitioned_window_anywhere moved to
     tests/test_catalog_sweep.py (r13): it shares ONE full-catalog
